@@ -31,6 +31,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import local_frame
 from .sources import datasource as ds
 from .sources import iolayer as iol
 from .sources import lance_format as lf
@@ -307,7 +308,8 @@ def _run_maintenance(spark: SparkSession, sql: str) -> DataFrame | None:
                     "KEEP_LAST <int>, OLDER_THAN_SECONDS <float>"
                 )
         stats = lf.cleanup_old_versions(path, **kwargs)
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [
                 (
                     int(stats["versions_removed"]),
@@ -336,7 +338,8 @@ def _run_maintenance(spark: SparkSession, sql: str) -> DataFrame | None:
                 )
             optimize(spark, path, zorder_cols=(names[0], names[1]))
         head = lf.read_manifest(path)
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(head.version, len(head.fragments))],
             "version long, n_fragments long",
         )
@@ -440,7 +443,7 @@ def _run_update(spark: SparkSession, sql: str) -> DataFrame | None:
     from .sources.maintenance import update_where_sql
 
     n = update_where_sql(spark, path, assignments, pred)
-    return spark.createDataFrame([(n,)], "rows_updated long")
+    return local_frame(spark, [(n,)], "rows_updated long")
 
 
 # ----------------------------------------------------------- DELETE
@@ -619,7 +622,8 @@ def _run_describe(spark: SparkSession, sql: str) -> DataFrame | None:
                     sum(f.num_deleted for f in man.fragments),
                 )
             )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows,
             "version long, n_fragments long, n_rows long, "
             "n_deleted long",
@@ -634,7 +638,8 @@ def _run_describe(spark: SparkSession, sql: str) -> DataFrame | None:
         from .sources.maintenance import _committed_schema
 
         schema = _committed_schema(lf.read_manifest(path))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (f.name, f.dataType.simpleString(), f.nullable)
             for f in schema.fields
@@ -806,7 +811,8 @@ def _run_alter(spark: SparkSession, sql: str) -> DataFrame | None:
     from pyspark.sql.types import StructType as _St
 
     schema = _St.fromJson(json.loads(committed.schema_json))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (f.name, f.dataType.simpleString(), f.nullable)
             for f in schema.fields
@@ -926,7 +932,8 @@ def _describe_schema(spark: SparkSession, path: str) -> DataFrame:
 
     committed = lf.read_manifest(path)
     schema = _St.fromJson(json.loads(committed.schema_json))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (f.name, f.dataType.simpleString(), f.nullable)
             for f in schema.fields
@@ -1118,7 +1125,8 @@ def _run_alter_drop(
     from pyspark.sql.types import StructType as _St
 
     schema = _St.fromJson(json.loads(committed.schema_json))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (f.name, f.dataType.simpleString(), f.nullable)
             for f in schema.fields
@@ -1149,7 +1157,7 @@ def _run_delete(spark: SparkSession, sql: str) -> DataFrame | None:
     from .sources.maintenance import delete_where_sql
 
     n = delete_where_sql(spark, path, m.group("pred"))
-    return spark.createDataFrame([(n,)], "rows_deleted long")
+    return local_frame(spark, [(n,)], "rows_deleted long")
 
 
 # ------------------------------------------------------------ MERGE
@@ -1794,7 +1802,8 @@ def _run_merge(spark: SparkSession, parsed: dict) -> DataFrame:
     finally:
         if needs_spill:
             release_spill(src)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_upd, n_ins, n_del)],
         "rows_updated long, rows_inserted long, rows_deleted long",
     )
@@ -1887,8 +1896,8 @@ def _write_and_count(
     writer.save(path)
     # rows written, from manifest metadata (no recompute of the query)
     total = sum(f.num_rows for f in lf.read_manifest(path).fragments)
-    return spark.createDataFrame(
-        [(total - before,)], schema="rows_copied long"
+    return local_frame(
+        spark, [(total - before,)], schema="rows_copied long"
     )
 
 
@@ -1964,7 +1973,7 @@ def _native_live_df(spark: SparkSession, path: str) -> DataFrame:
     manifest = lf.read_manifest(path)
     committed = _committed_schema(manifest)
     if not manifest.fragments:
-        return spark.createDataFrame([], committed)
+        return local_frame(spark, [], committed)
     groups: dict = {}
     for f in manifest.fragments:
         groups.setdefault(_partition_colmap(manifest, f), []).append(f)
@@ -2176,7 +2185,8 @@ def _run_ann(spark: SparkSession, sql: str) -> DataFrame | None:
     from pyspark.sql import functions as F
 
     where = m.group("where")
-    probes = spark.createDataFrame(
+    probes = local_frame(
+        spark,
         [(0, vec)],
         schema=f"probe_id long, {meta['column']} array<double>",
     )

@@ -53,6 +53,7 @@ from ..sources import iolayer as iol
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..tables import load
 
 K1 = 1.2
@@ -785,8 +786,8 @@ def fts_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
     if lo is None:
-        return spark.createDataFrame(
-            [], "doc_id long, n_terms long, score double"
+        return local_frame(
+            spark, [], "doc_id long, n_terms long, score double"
         )
     from .common import bulk_two_sixths_cuts
 
@@ -990,6 +991,11 @@ def search_bm25_dataset(
     )
 
 
+def _fts_dataset_root(sf_dir: str) -> str:
+    tag = os.path.basename(sf_dir.rstrip("/"))
+    return os.path.join("/tmp/lance_duckdb_spark", tag, "ftsdocs.lance")
+
+
 def _staged_fts_dataset(spark: SparkSession, sf_dir: str) -> str:
     """Stage documents as a lance dataset with a DATASET-ATTACHED
     inverted index (build_fts_index_for_dataset), reused when
@@ -1006,8 +1012,7 @@ def _staged_fts_dataset(spark: SparkSession, sf_dir: str) -> str:
     from ..sources.datasource import register
 
     register(spark)
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    root = os.path.join("/tmp/lance_duckdb_spark", tag, "ftsdocs.lance")
+    root = _fts_dataset_root(sf_dir)
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     prof = docs.agg(
         F.count(F.lit(1)).alias("n"),
@@ -1053,8 +1058,18 @@ def lance_sql_fts(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix and ladder behavior are pytest-asserted
     (tests/test_fts_dataset.py)."""
     from ..catalog import lance_sql
+    from ..sources import lance_format as lf
 
-    root = _staged_fts_dataset(spark, sf_dir)
+    # the terms and the root are spliced into the statement as SQL
+    # string literals, unescaped: a quote would end the literal early
+    root = _fts_dataset_root(sf_dir)
+    quoted = [s for s in (*QUERY_TERMS, root) if "'" in s]
+    if quoted:
+        raise lf.LanceDatasetError(
+            f"lance_sql_fts: {quoted!r} contains a single quote, which "
+            "the match_bm25 statement cannot carry in a string literal"
+        )
+    _staged_fts_dataset(spark, sf_dir)
     terms = " ".join(QUERY_TERMS)
     stmt = (
         f"SELECT doc_id, match_bm25(text, '{terms}') AS score "

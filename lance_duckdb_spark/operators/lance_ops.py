@@ -14,6 +14,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources.datasource import register
 from ..tables import load
 from .common import dsum, money
@@ -154,8 +155,10 @@ def lance_dataset_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_fields,
         )
     ]
-    return spark.createDataFrame(
-        row, schema="version int, n_fragments int, total_rows long, n_fields int"
+    return local_frame(
+        spark,
+        row,
+        schema="version int, n_fragments int, total_rows long, n_fields int",
     )
 
 
@@ -993,7 +996,8 @@ def lance_delete_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     man = lf.read_manifest(root)
     files_now = {f.file for f in man.fragments}
-    meta = spark.createDataFrame(
+    meta = local_frame(
+        spark,
         [
             (
                 len(files_now - files_v1),  # data files rewritten: 0
@@ -1085,7 +1089,8 @@ def lance_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         dsum(money("s_acctbal"), "total_bal"),
         F.countDistinct("s_suppkey").alias("n_keys"),
     )
-    meta = spark.createDataFrame(
+    meta = local_frame(
+        spark,
         [(len(before.fragments), len(after.fragments))],
         schema="frags_before int, frags_after int",
     )
@@ -1247,7 +1252,7 @@ def version_changes(
         empty = StructType(
             committed.fields + [StructField("_change_type", StringType())]
         )
-        return spark.createDataFrame([], empty)
+        return local_frame(spark, [], empty)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -1638,19 +1643,19 @@ def _pruned_take(path: str, cols: list[str], phys: list[int]):
 
     from ..sources import iolayer as _iol
 
-    pf = _iol.parquet_file(path)
-    md = pf.metadata
-    offs = [0]
-    for g in range(md.num_row_groups):
-        offs.append(offs[-1] + md.row_group(g).num_rows)
-    hit = sorted({bisect_right(offs, p) - 1 for p in phys})
-    base = {}
-    run = 0
-    for g in hit:
-        base[g] = run - offs[g]
-        run += offs[g + 1] - offs[g]
-    sel = [base[bisect_right(offs, p) - 1] + p for p in phys]
-    return pf.read_row_groups(hit, columns=cols).take(sel)
+    with _iol.parquet_file(path) as pf:
+        md = pf.metadata
+        offs = [0]
+        for g in range(md.num_row_groups):
+            offs.append(offs[-1] + md.row_group(g).num_rows)
+        hit = sorted({bisect_right(offs, p) - 1 for p in phys})
+        base = {}
+        run = 0
+        for g in hit:
+            base[g] = run - offs[g]
+            run += offs[g + 1] - offs[g]
+        sel = [base[bisect_right(offs, p) - 1] + p for p in phys]
+        return pf.read_row_groups(hit, columns=cols).take(sel)
 
 
 def take_rows(
@@ -1722,8 +1727,9 @@ def take_rows(
             per_frag[frag.file] = (local, frag.deletion_file)
         start = end
     if not per_frag:
-        return spark.createDataFrame([], schema)
-    tasks = spark.createDataFrame(
+        return local_frame(spark, [], schema)
+    tasks = local_frame(
+        spark,
         [(f, p, d) for f, (p, d) in per_frag.items()],
         "file string, positions array<long>, dfile string",
     ).repartition(len(per_frag))

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..tables import load
 from .similarity import ANN_TOPK_SQL, N_PROBES, TOP_K
 
@@ -89,8 +90,10 @@ def ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     if not probe_rows:
-        return spark.createDataFrame(
-            [], "probe_id long, neighbor_id long, cos_sim double, rnk int"
+        return local_frame(
+            spark,
+            [],
+            "probe_id long, neighbor_id long, cos_sim double, rnk int",
         )
     P = np.array([r["embedding"] for r in probe_rows], dtype=np.float32).astype(
         np.float64
@@ -350,8 +353,10 @@ def sq8_store_search(
         .collect()
     )
     if not probe_rows:
-        return spark.createDataFrame(
-            [], "probe_id long, neighbor_id long, cos_sim double, rnk int"
+        return local_frame(
+            spark,
+            [],
+            "probe_id long, neighbor_id long, cos_sim double, rnk int",
         )
     P = np.array(
         [r["embedding"] for r in probe_rows], dtype=np.float32

@@ -33,6 +33,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..tables import US_PER_HOUR, load
 from .common import money
 
@@ -164,7 +165,7 @@ def rollup_query(
         # empty events: MAX() is NULL and the window arithmetic
         # would crash opaquely — serve the honest empty summary
         # with the contract schema instead (r4 ADVICE edge)
-        return spark.createDataFrame([], DAILY_SUMMARY_SCHEMA)
+        return local_frame(spark, [], DAILY_SUMMARY_SCHEMA)
     lo_hour = max_h - WINDOW_HOURS
     # the raw/rollup boundary is the STORE's recorded cutoff, not
     # query-time max_h - TAIL_HOURS: a store built before newer

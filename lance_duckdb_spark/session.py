@@ -11,8 +11,10 @@ hints — so they run unchanged under the driver's own session.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 
 def get_spark(app_name: str = "lance_duckdb_spark") -> SparkSession:
@@ -37,3 +39,37 @@ def get_spark(app_name: str = "lance_duckdb_spark") -> SparkSession:
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: Iterable[Sequence],
+    schema: StructType | str,
+) -> DataFrame:
+    """The one way the package builds a frame from driver-held rows
+    (tuples in ``schema`` field order; ``schema`` a StructType or a
+    DDL string).
+
+    The rows go through a ``pyarrow.Table``, not a Python list: a
+    list-built frame plans as ``Scan ExistingRDD`` and starts a Spark
+    job every time it is collected or broadcast, while an Arrow table
+    below ``spark.sql.execution.arrow.localRelationThreshold`` becomes
+    a ``LocalRelation`` that collects and broadcasts on the driver with
+    no job. Above the threshold Spark ships the table to executors as
+    before, so the result is correct at any size.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    columns = (
+        list(zip(*rows, strict=True)) if rows else [()] * len(arrow_schema)
+    )
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

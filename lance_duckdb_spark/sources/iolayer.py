@@ -52,6 +52,7 @@ as the local ``os.link`` CAS.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import os
 import shutil
@@ -457,16 +458,23 @@ def read_parquet(path: str, columns=None, filters=None):
     return pq.read_table(local_path(path), columns=columns, filters=filters)
 
 
+@contextlib.contextmanager
 def parquet_file(path: str):
     """A ``pyarrow.parquet.ParquetFile`` over either scheme — the
     footer-metadata handle for row-group-selective reads
     (``read_row_groups``), so point reads decode only the row groups
-    they hit instead of the whole object."""
+    they hit instead of the whole object. A context manager: the
+    file and, on pafs://, the input stream it reads are closed on
+    exit (``ParquetFile.close`` leaves a caller-opened stream open)."""
     import pyarrow.parquet as pq
 
     if is_pafs(path):
-        return pq.ParquetFile(_pafs_fs().open_input_file(_pafs_key(path)))
-    return pq.ParquetFile(local_path(path))
+        with _pafs_fs().open_input_file(_pafs_key(path)) as src:
+            with pq.ParquetFile(src) as pf:
+                yield pf
+    else:
+        with pq.ParquetFile(local_path(path)) as pf:
+            yield pf
 
 
 def read_parquet_schema(path: str):

@@ -25,6 +25,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
 from . import lance_format as lf
 from .datasource import register
 
@@ -183,7 +184,7 @@ def _deletion_masks_df(spark: SparkSession, root: str, fragments):
 
     - ``<= MASK_INLINE_MAX``: driver-read + broadcast — explicitly
       BOUNDED (unlike the r10 implementation, which always built
-      this frame via ``createDataFrame`` of every position — an
+      this frame from a driver-side list of every position — an
       unbounded O(total deletions) driver allocation; at 100 TB a
       1%-deleted table is ~10^9 Row objects). At interactive scale
       this saves two scan jobs per DML statement.
@@ -199,7 +200,8 @@ def _deletion_masks_df(spark: SparkSession, root: str, fragments):
         return None
     if sum(f.num_deleted for f in with_dels) <= MASK_INLINE_MAX:
         return F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [
                     (os.path.basename(f.file), int(p))
                     for f in with_dels
@@ -208,7 +210,8 @@ def _deletion_masks_df(spark: SparkSession, root: str, fragments):
                 schema="__file string, __pos long",
             )
         )
-    pairs = spark.createDataFrame(
+    pairs = local_frame(
+        spark,
         [
             (os.path.basename(f.deletion_file), os.path.basename(f.file))
             for f in with_dels

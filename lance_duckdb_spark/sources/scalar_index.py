@@ -37,6 +37,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from . import iolayer as iol
 from . import lance_format as lf
 from .datasource import register
@@ -109,8 +110,10 @@ def build_scalar_index(
     # basename -> manifest-relative path (fragment basenames are
     # uuid-unique by construction)
     base_to_rel = {os.path.basename(f.file): f.file for f in manifest.fragments}
-    mapping = spark.createDataFrame(
-        list(base_to_rel.items()), schema="__file string, fragment string"
+    mapping = local_frame(
+        spark,
+        list(base_to_rel.items()),
+        schema="__file string, fragment string",
     )
     idx_dir = _index_dir(root, column)
     # stage into a FRESH uniquely-named entries dir and publish it

@@ -30,6 +30,7 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
 from . import lance_format as lf
 
 
@@ -89,7 +90,7 @@ def manifest_aggregates(
             "a real scan"
         )
     total = sum(f.live_rows for f in manifest.fragments)
-    row: dict = {"total_rows": total}
+    row: list = [total]
     out_fields = [StructField("total_rows", LongType(), False)]
     for c in columns:
         mins = [
@@ -102,9 +103,8 @@ def manifest_aggregates(
             for f in manifest.fragments
             if f.stats and c in f.stats
         ]
-        row[f"min_{c}"] = min(mins) if mins else None
-        row[f"max_{c}"] = max(maxs) if maxs else None
+        row += [min(mins) if mins else None, max(maxs) if maxs else None]
         t = fields_by_name[c].dataType
         out_fields.append(StructField(f"min_{c}", t, True))
         out_fields.append(StructField(f"max_{c}", t, True))
-    return spark.createDataFrame([row], StructType(out_fields))
+    return local_frame(spark, [tuple(row)], StructType(out_fields))

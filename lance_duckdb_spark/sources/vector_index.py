@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..materialize import release_spill, spill_to_parquet
+from ..session import local_frame
 from . import iolayer as iol
 from . import lance_format as lf
 from .datasource import register
@@ -986,7 +987,8 @@ def ann_search(
             for b in order:
                 pb_rows.append((int(r["probe_id"]), int(b), vec))
                 all_buckets.add(int(b))
-    probe_buckets = spark.createDataFrame(
+    probe_buckets = local_frame(
+        spark,
         pb_rows,
         schema="probe_id long, bucket_id long, __probe_vec array<double>",
     )
@@ -1400,8 +1402,8 @@ def ann_search_pq(
             luts[(int(r["probe_id"]), b)] = lut
     bc_luts = spark.sparkContext.broadcast(luts)
 
-    probe_buckets = spark.createDataFrame(
-        pb_rows, schema="probe_id long, bucket_id int"
+    probe_buckets = local_frame(
+        spark, pb_rows, schema="probe_id long, bucket_id int"
     )
     pq_dirs = [_pq_postings_dir(root, meta)] + [
         os.path.join(root, PQ_INDEX_DIR, d)
@@ -1471,7 +1473,8 @@ def ann_search_pq(
         .load(root)
         .select(F.col(id_col).alias("cand_id"), F.col(column).alias("__v"))
     )
-    pvecs = spark.createDataFrame(
+    pvecs = local_frame(
+        spark,
         [(int(r["probe_id"]), list(map(float, r[column]))) for r in probe_rows],
         schema=f"probe_id long, __p array<double>",
     )

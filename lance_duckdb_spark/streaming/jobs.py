@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.common import bulk_two_sixths_cuts as _cuts, money
+from ..session import local_frame
 from ..tables import US_PER_HOUR, load
 
 WATERMARK = "10 minutes"
@@ -304,7 +305,7 @@ def _read_staged_out(spark: SparkSession, out: str, schema: str) -> DataFrame:
     import os
 
     if not os.path.isdir(out):
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return spark.read.parquet(out)
 
 
@@ -454,7 +455,8 @@ def stream_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     dst = _fresh_stream_root(sf_dir, "sinkdst")
     splits = _time_splits(load(spark, sf_dir, "events"))
     if not splits:  # empty events: no dataset was ever written at dst
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "event_type string, n_events long, sum_value double, n_ids long",
         )
@@ -693,7 +695,7 @@ def _read_epoch_store(
     import os
 
     if not os.path.isdir(path):
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     df = spark.read.parquet(path)
     if exclude_epoch is not None and "epoch" in df.columns:
         df = df.where(F.col("epoch") != exclude_epoch)
@@ -811,8 +813,8 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     if lo is None:
         # empty corpus: no batches to run (the arithmetic below
         # would TypeError on None — r8 review finding)
-        return spark.createDataFrame(
-            [], "doc_a long, doc_b long, jaccard double"
+        return local_frame(
+            spark, [], "doc_a long, doc_b long, jaccard double"
         )
     step = (hi - lo) // 3 + 1
     slices = [
@@ -849,8 +851,8 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _await_or_raise(q)
 
     if not os.path.isdir(results_dir):  # empty corpus: no batches ran
-        return spark.createDataFrame(
-            [], "doc_a long, doc_b long, jaccard double"
+        return local_frame(
+            spark, [], "doc_a long, doc_b long, jaccard double"
         )
     return (
         spark.read.parquet(results_dir)
@@ -933,7 +935,7 @@ def stream_continuous_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.isdir(store):  # empty stream: no batches ran
         from ..operators.timeseries import DAILY_SUMMARY_SCHEMA
 
-        return spark.createDataFrame([], DAILY_SUMMARY_SCHEMA)
+        return local_frame(spark, [], DAILY_SUMMARY_SCHEMA)
     rolled = spark.read.parquet(store).drop("epoch")
     # literal cutoff (bounded 1-row collect): day-partition pruning
     # on the store needs a literal, a join-derived filter can't prune
@@ -941,7 +943,7 @@ def stream_continuous_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     if max_h is None:  # empty stream: honest empty summary, no crash
         from ..operators.timeseries import DAILY_SUMMARY_SCHEMA
 
-        return spark.createDataFrame([], DAILY_SUMMARY_SCHEMA)
+        return local_frame(spark, [], DAILY_SUMMARY_SCHEMA)
     return (
         rolled.where(F.col("day_idx") >= (max_h - 168) // 24)
         .where(F.col("hour_idx") > max_h - 168)
@@ -1013,7 +1015,8 @@ def stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (first 2/3) seeds the index, two streamed sixths extend it
     lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
     if lo is None:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "probe_id long, neighbor_id long, cos_sim double, "
             "rnk int, ingest_recall_ok boolean",
@@ -1119,8 +1122,8 @@ def stream_fts_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
     if lo is None:
-        return spark.createDataFrame(
-            [], "doc_id long, n_terms long, score double"
+        return local_frame(
+            spark, [], "doc_id long, n_terms long, score double"
         )
     cuts = _cuts(lo, hi)
 

@@ -185,6 +185,20 @@ def test_match_bm25_sql_refusals(spark, sf_dir, docs_root):
     assert n > 0
 
 
+def test_lance_sql_fts_refuses_quotes(spark, tmp_path, monkeypatch):
+    """lance_sql_fts splices its query terms and the staged dataset
+    root into the match_bm25 statement as string literals, unescaped:
+    a quote in either is refused before any staging work instead of
+    ending the literal early."""
+    from lance_duckdb_spark.operators import fts
+
+    with pytest.raises(lf.LanceDatasetError, match="single quote"):
+        fts.lance_sql_fts(spark, str(tmp_path / "sf'quoted"))
+    monkeypatch.setattr(fts, "QUERY_TERMS", ("o'brien", "scan"))
+    with pytest.raises(lf.LanceDatasetError, match="single quote"):
+        fts.lance_sql_fts(spark, str(tmp_path / "sf_plain"))
+
+
 def test_fts_dataset_delete_append_extend_loop(spark, docs_root):
     """The zero-rebuild curation loop for TEXT (r14 late): DELETE →
     APPEND → extend_fts_index_for_dataset → search. Pre-extend

@@ -331,3 +331,29 @@ def test_manifest_dropped_columns_string_entries_normalized():
         "alpha": 2,
         "zeta": None,
     }
+
+
+def test_pruned_take_closes_its_file(spark, sf_dir, mem_root, monkeypatch):
+    """The take fetch task opens one footer handle per fragment it
+    reads; ``_pruned_take`` must close it (and, on pafs://, the input
+    stream under it) before returning, not leave it to the collector."""
+    import pyarrow.parquet as pq
+
+    from lance_duckdb_spark.operators.lance_ops import _pruned_take
+
+    _nation_target(spark, sf_dir, mem_root)
+    frag = lf.read_manifest(mem_root).fragments[0]
+    opened = []
+
+    class RecordingParquetFile(pq.ParquetFile):
+        def __init__(self, *args, **kwargs):
+            super().__init__(*args, **kwargs)
+            opened.append(self)
+
+    monkeypatch.setattr(pq, "ParquetFile", RecordingParquetFile)
+    path = os.path.join(mem_root, frag.file)
+    got = _pruned_take(path, ["n_nationkey"], [0, 2])
+    want = iol.read_parquet(path, columns=["n_nationkey"]).take([0, 2])
+    assert got.equals(want)
+    assert opened, "the take read no footer through iolayer.parquet_file"
+    assert all(pf.closed for pf in opened)
