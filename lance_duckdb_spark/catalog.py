@@ -29,12 +29,14 @@ import json
 import os
 import re
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 
 from .session import local_frame
 from .sources import datasource as ds
 from .sources import iolayer as iol
 from .sources import lance_format as lf
+from .sources import maintenance
 
 
 def _is_lance_dataset(path: str) -> bool:
@@ -157,10 +159,20 @@ def register_lance_views(
 # values) are data, not table refs, and are left untouched; the
 # reference's replacement scan gets the same positional context from
 # DuckDB's parser
-_PATH_RE = re.compile(
-    r"""\b((?:FROM|JOIN)\s+)(['"`])([^'"`]+\.lance)\2""",
-    re.IGNORECASE,
-)
+def _path_re(keywords: str) -> re.Pattern:
+    return re.compile(
+        rf"""\b((?:{keywords})\s+)(['"`])([^'"`]+\.lance)\2""", re.IGNORECASE
+    )
+
+
+_PATH_RE = _path_re("FROM|JOIN")
+# ... and the DML statements' target and source positions, where a
+# quoted path is a Spark syntax error: rewritten to a backtick
+# identifier once before Spark's parser sees the statement
+_DML_PATH_RE = _path_re("FROM|JOIN|INTO|UPDATE|USING|TABLE")
+
+# first keyword at or after a position, past any comments
+_LEAD_RE = re.compile(r"(?s)\s*(?:(?:--[^\n]*|/\*.*?\*/)\s*)*([A-Za-z]+)")
 
 # `IS [NOT] DISTINCT FROM '<path>.lance'` — there FROM is an operator
 # keyword, not a table position, and rewriting the literal produced an
@@ -221,49 +233,11 @@ def _narrowed_schema(path: str, sql: str):
     return StructType(kept)
 
 
-def _split_copy_to(sql: str):
-    """Parse ``COPY (<select>) TO '<path>.lance' [(<options>)]``.
-
-    The SELECT body is extracted by paren counting (it may itself
-    contain parens and quoted strings), not regex greed. Returns
-    (select_sql, path, options_str) or None when the statement is
-    not a lance COPY."""
-    m = re.match(r"(?is)^\s*COPY\s*\(", sql)
-    if not m:
-        return None
-    i = m.end() - 1  # at the opening '('
-    depth, j, in_str = 0, i, None
-    while j < len(sql):
-        c = sql[j]
-        if in_str:
-            if c == in_str:
-                in_str = None
-        elif c in "'\"":
-            in_str = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                break
-        j += 1
-    if depth != 0:
-        return None
-    select = sql[m.end() : j]
-    rest = sql[j + 1 :]
-    m2 = re.match(
-        r"(?is)^\s*TO\s+(['\"`])([^'\"`]+\.lance)\1"
-        r"\s*(?:\(([^)]*)\))?\s*;?\s*$",
-        rest,
-    )
-    if not m2:
-        return None
-    return select, m2.group(2), (m2.group(3) or "")
-
-
-_CTAS_RE = re.compile(
-    r"(?is)^\s*CREATE\s+(?P<replace>OR\s+REPLACE\s+)?TABLE\s+"
-    r"(['\"`])(?P<path>[^'\"`]+\.lance)\2\s+AS\s+(?P<select>.+?)\s*;?\s*$"
+# ``COPY (<select>) TO '<path>.lance' [(<options>)]``: the select is
+# everything between the first "(" and the last ") TO '<path>.lance'"
+_COPY_RE = re.compile(
+    r"""(?is)^\s*COPY\s*\((?P<select>.*)\)\s*TO\s+(['"`])"""
+    r"""(?P<path>[^'"`]+\.lance)\2\s*(?:\((?P<opts>[^)]*)\))?\s*;?\s*$"""
 )
 
 
@@ -352,205 +326,360 @@ def _run_maintenance(spark: SparkSession, sql: str) -> DataFrame | None:
     return None
 
 
-# ----------------------------------------------------------- UPDATE
+# ------------------------------------------- DML through Spark's parser
+#
+# MERGE, UPDATE, DELETE, INSERT and CTAS are parsed by Spark's own SQL
+# parser (the reference's DML is its host engine's grammar, DuckDB's);
+# each verb's runner reads the parsed plan and slices the exact
+# statement text of every condition, value and query out of it, so
+# quoting, escapes, comments and nesting are the parser's business.
+# ALTER, COPY, VACUUM, OPTIMIZE, DESCRIBE and the ANN/FTS sugar have no
+# Spark grammar and stay on their own matchers below.
 
-_UPDATE_START_RE = re.compile(r"(?is)^\s*UPDATE\b")
-_UPDATE_HEAD_RE = re.compile(
-    r"(?is)^\s*UPDATE\s+(['\"`])(?P<path>[^'\"`]+\.lance)\1\s+SET\s+"
+_DML_VERBS = frozenset({"MERGE", "UPDATE", "DELETE", "INSERT", "CREATE"})
+_WRITE_VERBS = frozenset(
+    {"COPY", "CREATE", "MERGE", "DELETE", "UPDATE", "VACUUM", "OPTIMIZE",
+     "INSERT", "ALTER"}
 )
+_DML_SYNTAX = {
+    "UPDATE": "unsupported UPDATE syntax; supported: UPDATE "
+    "'<path>.lance' SET <col> = <spark-sql expr>[, ...] "
+    "[WHERE <spark-sql predicate>] (no target alias)",
+    "DELETE": "unsupported DELETE syntax; supported: DELETE FROM "
+    "'<path>.lance' WHERE <spark-sql predicate> (no target alias; an "
+    "unbounded DELETE without WHERE is refused — overwrite the dataset "
+    "explicitly if you mean delete-everything)",
+    "INSERT": "unsupported INSERT syntax; supported: INSERT INTO "
+    "'<path>.lance' [(col, ...)] <select-or-VALUES> (no OVERWRITE, "
+    "PARTITION or BY NAME)",
+    "CREATE": "unsupported CREATE TABLE syntax; supported: CREATE [OR "
+    "REPLACE] TABLE '<path>.lance' AS <select>",
+}
+# a nested write where Spark's grammar wants a query
+_READ_ONLY = {
+    "INSERT": "INSERT INTO takes a read-only query",
+    "MERGE": "MERGE USING takes a read-only subquery",
+    "CREATE": "CREATE TABLE AS takes a read-only query",
+}
+_WHEN_RE = re.compile(r"(?i)\bWHEN\s+(?:NOT\s+)?MATCHED(?:\s+BY\s+(?:SOURCE|TARGET))?")
+# (clause kind, token Spark stopped at) -> the dialect's refusal
+_MERGE_CLAUSE_REFUSALS = {
+    ("NOT MATCHED BY SOURCE", "*"): "WHEN NOT MATCHED BY SOURCE cannot "
+    "UPDATE SET * : no source row exists to replace from — assign "
+    "explicit columns",
+    ("NOT MATCHED BY SOURCE", "INSERT"): "WHEN NOT MATCHED BY SOURCE "
+    "cannot INSERT (no source row exists in the by-source branch)",
+    ("NOT MATCHED", "DELETE"): "WHEN NOT MATCHED cannot DELETE: no target "
+    "row exists in the not-matched branch",
+    ("NOT MATCHED", "UPDATE"): "WHEN NOT MATCHED cannot UPDATE: no target "
+    "row exists in the not-matched branch (use INSERT)",
+    ("NOT MATCHED", "SELECT"): "INSERT with a column list requires VALUES "
+    "(<expr>, ...)",
+    ("MATCHED", "INSERT"): "WHEN MATCHED cannot INSERT",
+}
 
 
-def _top_level_chars(s: str):
-    """(index, char) pairs at paren depth 0 outside quotes — the
-    scanner both the SET-list splitter and the WHERE finder use, so
-    commas/keywords inside subqueries or function calls never
-    confuse the parse."""
-    depth, in_str = 0, None
-    for i, c in enumerate(s):
-        if in_str:
-            if c == in_str:
-                in_str = None
-        elif c in "'\"":
-            in_str = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0:
-            yield i, c
+def _jlist(seq) -> list:
+    """A Scala ``Seq`` as a Python list."""
+    it, out = seq.iterator(), []
+    while it.hasNext():
+        out.append(it.next())
+    return out
 
 
-def _top_level_where(s: str) -> int | None:
-    """Index of the first top-level WHERE keyword, else None."""
-    for i, c in _top_level_chars(s):
-        if c in "Ww" and s[i : i + 5].upper() == "WHERE":
-            before_ok = i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_")
-            after = s[i + 5 : i + 6]
-            if before_ok and (not after or not (after.isalnum() or after == "_")):
-                return i
-    return None
+def _span(node) -> tuple[int, int] | None:
+    """A parsed node's own (start, stop) statement offsets, stop
+    inclusive."""
+    o = node.origin()
+    lo, hi = o.startIndex(), o.stopIndex()
+    return (lo.get(), hi.get()) if lo.isDefined() and hi.isDefined() else None
 
 
-def _split_top_level_commas(s: str) -> list[str]:
-    parts, last = [], 0
-    for i, c in _top_level_chars(s):
-        if c == ",":
-            parts.append(s[last:i])
-            last = i + 1
-    parts.append(s[last:])
-    return parts
+class _Slice:
+    """A parsed expression as the exact statement text it came from,
+    with the offsets of its qualified column references (``t.col``,
+    subqueries included) so MERGE can rewrite them onto the joined
+    frame's physical names. The text runs from the lowest start to the
+    highest stop offset over the whole subtree: ``n IN (1, 2)``, ``n
+    BETWEEN 1 AND 3`` and ``s IS NULL`` nodes start at their keyword,
+    and ``Expression.sql()`` prints a subquery as ``listquery()``.
+    Boolean literals are shared singletons holding the offsets of
+    whichever statement first built them (skipped), and ``Exists``
+    inherits its clause's offsets (rebuilt around its subquery)."""
+
+    def __init__(self, sql: str, expr):
+        self.sql, self.lo, self.hi = sql, len(sql), -1
+        self.refs: list[tuple[int, int, list[str]]] = []
+        self._walk(expr, True)
+        if self.hi < 0:  # a bare TRUE/FALSE: no offsets of its own
+            self.sql = expr.sql()
+            self.lo, self.hi = 0, len(self.sql) - 1
+
+    def _cover(self, lo: int, hi: int) -> None:
+        self.lo, self.hi = min(self.lo, lo), max(self.hi, hi)
+
+    def _walk(self, node, spans: bool) -> None:
+        name, span = node.nodeName(), _span(node)
+        if name == "UnresolvedAttribute" and span:
+            self.refs.append((*span, _jlist(node.nameParts())))
+        if name == "Exists":
+            inner = _span(node.plan())
+            if spans and inner:
+                lo = self.sql.rfind("(", 0, inner[0])
+                self._cover(
+                    self.sql.upper().rfind("EXISTS", 0, lo),
+                    self.sql.find(")", inner[1] + 1),
+                )
+        elif spans and span and not (
+            name == "Literal" and node.dataType().typeName() == "boolean"
+        ):
+            self._cover(*span)
+        for child in _jlist(node.children()):
+            self._walk(child, spans)
+        if name in ("Exists", "ScalarSubquery", "ListQuery"):
+            self._walk_plan(node.plan())
+
+    def _walk_plan(self, plan) -> None:
+        for e in _jlist(plan.expressions()):
+            self._walk(e, False)
+        for child in _jlist(plan.children()):
+            self._walk_plan(child)
+
+    def text(self, prefixes: dict | None = None, renames: dict | None = None) -> str:
+        """The expression's text with ``alias.col`` references whose
+        lowercase alias is in ``prefixes`` rewritten to
+        `` `<prefix><col>` `` (``renames`` optionally maps an alias's
+        column names — the USING key rename). References not rewritten
+        pass through and fail Spark analysis loudly."""
+        prefixes, renames = prefixes or {}, renames or {}
+        out, pos = [], self.lo
+        for lo, hi, parts in sorted(self.refs):
+            alias = parts[0].lower()
+            if len(parts) < 2 or alias not in prefixes or lo < pos:
+                continue
+            col = renames.get(alias, {}).get(parts[1], parts[1])
+            out += [self.sql[pos:lo], f"`{prefixes[alias]}{col}`"]
+            out += [f".`{p}`" for p in parts[2:]]
+            pos = hi + 1
+        out.append(self.sql[pos : self.hi + 1])
+        return "".join(out)
+
+    def uses(self, alias: str) -> bool:
+        """True when the expression references ``alias.<col>``."""
+        return any(len(p) > 1 and p[0].lower() == alias for _, _, p in self.refs)
 
 
-def _run_update(spark: SparkSession, sql: str) -> DataFrame | None:
+def _lance_target(node) -> str | None:
+    """The dataset path of a `` `<path>.lance` `` table reference."""
+    if node.nodeName() == "UnresolvedRelation":
+        parts = _jlist(node.multipartIdentifier())
+    elif node.nodeName() == "UnresolvedIdentifier":
+        parts = _jlist(node.nameParts())
+    else:
+        return None
+    return parts[0] if len(parts) == 1 and parts[0].endswith(".lance") else None
+
+
+def _run_dml(spark: SparkSession, sql: str, verb: str) -> DataFrame | None:
+    """Parse a MERGE/UPDATE/DELETE/INSERT/CTAS statement with Spark's
+    parser and run it; None for a CREATE that names no lance dataset
+    (plain Spark SQL). Parse errors become the dialect's refusals."""
+    keywords: list[str] = []
+
+    def _quote(m: re.Match) -> str:
+        if not _in_table_position(sql, m):
+            return m.group(0)
+        keywords.append(m.group(1).split()[0].upper())
+        return f"{m.group(1)}`{m.group(3)}`"
+
+    text = _DML_PATH_RE.sub(_quote, sql)
+    if verb == "CREATE" and "TABLE" not in keywords:
+        return None
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    try:
+        plan = parser.parsePlan(text)
+    except ParseException as e:
+        raise _parse_refusal(parser, verb, text, e) from None
+    run = {
+        "MergeIntoTable": _run_merge,
+        "UpdateTable": _run_update,
+        "DeleteFromTable": _run_delete,
+        "InsertIntoStatement": _run_insert,
+        "CreateTableAsSelect": _run_ctas,
+        "ReplaceTableAsSelect": _run_ctas,
+    }.get(plan.nodeName())
+    if run is None:
+        raise lf.LanceDatasetError(_DML_SYNTAX.get(verb, "unsupported statement"))
+    return run(spark, text, plan)
+
+
+def _parse_refusal(parser, verb: str, sql: str, e: ParseException):
+    """The dialect's refusal for a DML statement Spark could not parse,
+    chosen from the error class and the clause or token at the error
+    position; anything unrecognized keeps Spark's own message."""
+    cond = e.getCondition() or ""
+    token = (e.getMessageParameters() or {}).get("error", "").strip("'").upper()
+    # the error's line and column, as an offset; PySpark keeps the Java
+    # ParseException, which carries them, as ``_origin``
+    start = e._origin.start()
+    line, col = start.line(), start.startPosition()
+    idx = len(sql)
+    if line.isDefined() and col.isDefined():
+        lines = sql.split("\n")[: line.get() - 1]
+        idx = sum(len(ln) + 1 for ln in lines) + col.get()
+    clause = ([None] + list(_WHEN_RE.finditer(sql, 0, idx)))[-1]
+    spark_msg = next((ln for ln in e.getMessage().splitlines() if ln.strip()), "")
+    if verb == "MERGE":
+        if cond.startswith("NON_LAST_") and cond.endswith("_OMIT_CONDITION"):
+            return _merge_err(
+                "unreachable (duplicate) WHEN clause: an earlier "
+                "unconditional clause of the same kind always applies first"
+            )
+        if cond == "_LEGACY_ERROR_TEMP_0006":
+            arity = _values_arity(parser, sql, idx)
+            if arity is not None:
+                return _merge_err(
+                    f"INSERT column list names {arity[0]} columns but "
+                    f"VALUES supplies {arity[1]} expressions"
+                )
+        if clause is not None:
+            kind = " ".join(clause.group(0).upper().split()[1:])
+            msg = _MERGE_CLAUSE_REFUSALS.get((kind.replace(" BY TARGET", ""), token))
+            if msg is not None:
+                return _merge_err(msg)
+    if clause is None and token in _WRITE_VERBS and verb in _READ_ONLY:
+        return lf.LanceDatasetError(
+            f"{_READ_ONLY[verb]}; nested write/DDL statements are refused"
+        )
+    if verb == "MERGE":
+        return _merge_err(f"unsupported MERGE syntax ({spark_msg})")
+    return lf.LanceDatasetError(f"{_DML_SYNTAX[verb]} ({spark_msg})")
+
+
+def _values_arity(parser, sql: str, idx: int) -> tuple[int, int] | None:
+    """(columns, values) of the MERGE ``INSERT (..) VALUES (..)`` clause
+    at ``idx``, re-parsed as an INSERT statement (no arity check)."""
+    if sql[idx : idx + 6].upper() != "INSERT":
+        return None
+    nxt = _WHEN_RE.search(sql, idx)
+    try:
+        ins = parser.parsePlan(f"INSERT INTO t {sql[idx + 6 : nxt and nxt.start()]}")
+    except ParseException:
+        return None
+    q = ins.query()
+    rows = q.rows().head() if q.nodeName() == "UnresolvedInlineTable" else q.output()
+    return ins.userSpecifiedCols().size(), rows.size()
+
+
+def _run_update(spark: SparkSession, sql: str, plan) -> DataFrame:
     """``UPDATE '<path>.lance' SET col = <expr>[, ...] [WHERE
     <pred>]`` — every expression is Spark SQL evaluated against the
     OLD row; lowered onto the fragment-pruned rewrite
     (maintenance.update_where_sql). Returns one row
     ``rows_updated``."""
-    if not _UPDATE_START_RE.match(sql):
-        return None
-    m = _UPDATE_HEAD_RE.match(sql)
-    if m is None:
-        raise lf.LanceDatasetError(
-            "unsupported UPDATE syntax; supported: UPDATE "
-            "'<path>.lance' SET <col> = <spark-sql expr>[, ...] "
-            "[WHERE <spark-sql predicate>] (no target alias)"
-        )
-    path = m.group("path")
+    path = _lance_target(plan.table())
+    if path is None:
+        raise lf.LanceDatasetError(_DML_SYNTAX["UPDATE"])
     _require_dml_target(path, "UPDATE")
-    rest = sql[m.end():].strip().rstrip(";").strip()
-    w = _top_level_where(rest)
-    if w is None:
-        sets_str, pred = rest, "TRUE"
-    else:
-        sets_str, pred = rest[:w], rest[w + 5 :].strip()
-        if not pred:
-            raise lf.LanceDatasetError("UPDATE has an empty WHERE clause")
     assignments: dict[str, str] = {}
-    for part in _split_top_level_commas(sets_str):
-        am = re.match(r"(?s)^\s*([A-Za-z_]\w*)\s*=\s*(.+?)\s*$", part)
-        if am is None:
+    for a in _jlist(plan.assignments()):
+        parts = _jlist(a.key().nameParts())
+        value = _Slice(sql, a.value()).text()
+        if len(parts) != 1:
             raise lf.LanceDatasetError(
-                f"malformed UPDATE assignment {part.strip()!r}; expected "
-                "<col> = <spark-sql expr>"
+                f"malformed UPDATE assignment {'.'.join(parts)} = {value!r}; "
+                "expected <col> = <spark-sql expr>"
             )
-        col = am.group(1)
-        if col in assignments:
+        if parts[0] in assignments:
             raise lf.LanceDatasetError(
-                f"duplicate UPDATE assignment for column {col!r}"
+                f"duplicate UPDATE assignment for column {parts[0]!r}"
             )
-        assignments[col] = am.group(2)
-    from .sources.maintenance import update_where_sql
-
-    n = update_where_sql(spark, path, assignments, pred)
+        assignments[parts[0]] = value
+    cond = plan.condition()
+    pred = _Slice(sql, cond.get()).text() if cond.isDefined() else "TRUE"
+    n = maintenance.update_where_sql(spark, path, assignments, pred)
     return local_frame(spark, [(n,)], "rows_updated long")
 
 
-# ----------------------------------------------------------- DELETE
+def _run_delete(spark: SparkSession, sql: str, plan) -> DataFrame:
+    """``DELETE FROM '<path>.lance' WHERE <predicate>`` — the
+    predicate is any Spark SQL boolean expression over the dataset's
+    columns, lowered onto deletion vectors (O(matches) metadata,
+    fragment files untouched; maintenance.delete_where_sql). An
+    unbounded DELETE is refused; Spark parses ``DELETE FROM x`` and
+    ``... WHERE TRUE`` alike, so the WHERE is looked for in the text
+    after the target. Returns one row ``rows_deleted``."""
+    table = plan.table()
+    path = _lance_target(table)
+    where = _LEAD_RE.match(sql, _span(table)[1] + 1) if path else None
+    if where is None or where.group(1).upper() != "WHERE":
+        raise lf.LanceDatasetError(_DML_SYNTAX["DELETE"])
+    _require_dml_target(path, "DELETE FROM")
+    pred = _Slice(sql, plan.condition()).text()
+    n = maintenance.delete_where_sql(spark, path, pred)
+    return local_frame(spark, [(n,)], "rows_deleted long")
 
-_DELETE_START_RE = re.compile(r"(?is)^\s*DELETE\b")
-_DELETE_RE = re.compile(
-    r"(?is)^\s*DELETE\s+FROM\s+(['\"`])(?P<path>[^'\"`]+\.lance)\1"
-    r"\s+WHERE\s+(?P<pred>.+?)\s*;?\s*$"
-)
 
-
-_INSERT_START_RE = re.compile(r"(?is)^\s*INSERT\b")
-_INSERT_RE = re.compile(
-    r"(?is)^\s*INSERT\s+INTO\s+(['\"`])(?P<path>[^'\"`]+\.lance)\1"
-    r"(?:\s*\((?P<cols>[^)]*)\))?\s+(?P<query>.+?)\s*;?\s*$"
-)
-
-
-def _run_insert(spark: SparkSession, sql: str) -> DataFrame | None:
+def _run_insert(spark: SparkSession, sql: str, plan) -> DataFrame:
     """``INSERT INTO '<path>.lance' [(col, ...)] <select | VALUES
-    ...>`` — DuckDB-hosted INSERT parity (the reference's host
-    engine accepts INSERT against any scanned table): the query runs
-    through the same read-path rewriting as any lance_sql statement
-    (top-level ``VALUES (...)`` is Spark SQL) and appends through
-    the lance writer as ONE new version. With a column list the
-    query's columns map POSITIONALLY onto the named dataset columns
-    and every unnamed column null-fills (the MERGE INSERT rule);
-    without one the query must carry exactly the dataset's schema
-    (the writer's append contract — loud refusal otherwise).
-    Refused: non-dataset / native-encoded targets, nested write
-    statements in the query, unknown or duplicate columns,
-    column/value arity mismatch, retyping. Returns one row
-    ``rows_inserted``."""
+    ...>`` — DuckDB-hosted INSERT parity: the query (the statement
+    text after the target or column list) runs through lance_sql and
+    appends through the lance writer as ONE new version. Columns map
+    POSITIONALLY onto the named dataset columns, or onto all of them
+    without a list; unnamed columns null-fill (the MERGE INSERT rule).
+    Refused: non-dataset / native-encoded targets, OVERWRITE,
+    PARTITION and BY NAME, unknown or duplicate columns, arity
+    mismatch, retyping. Returns one row ``rows_inserted``."""
     from pyspark.sql import functions as F
 
-    if not _INSERT_START_RE.match(sql):
-        return None
-    m = _INSERT_RE.match(sql)
-    if m is None:
-        raise lf.LanceDatasetError(
-            "unsupported INSERT syntax; supported: INSERT INTO "
-            "'<path>.lance' [(col, ...)] <select-or-VALUES>"
-        )
-    path = m.group("path")
-    _require_dml_target(path, "INSERT INTO")
-    query = m.group("query")
-    if re.match(
-        r"(?is)^\s*(COPY|CREATE|MERGE|DELETE|UPDATE|VACUUM|OPTIMIZE|"
-        r"INSERT|DESCRIBE|ALTER)\b",
-        query,
-    ):
-        raise lf.LanceDatasetError(
-            "INSERT INTO takes a read-only query; nested write/DDL "
-            "statements are refused"
-        )
     from .sources.maintenance import _committed_schema
 
-    df = lance_sql(spark, query)
+    table = plan.table()
+    path = _lance_target(table)
+    if (
+        path is None
+        or plan.overwrite()
+        or not plan.partitionSpec().isEmpty()
+        or plan.ifPartitionNotExists()
+        or plan.byName()
+    ):
+        raise lf.LanceDatasetError(_DML_SYNTAX["INSERT"])
+    _require_dml_target(path, "INSERT INTO")
+    cols = _jlist(plan.userSpecifiedCols())
+    start = _span(table)[1] + 1
+    if cols:  # the query follows the column list's closing paren
+        start = sql.find(")", start) + 1
+    df = lance_sql(spark, sql[start:].strip().rstrip(";"))
     committed = _committed_schema(lf.read_manifest(path))
-    cols_str = m.group("cols")
-    if cols_str is None:
-        # positional SQL INSERT semantics: the query's columns map
-        # onto the dataset's columns by position, names immaterial
-        if len(df.columns) != len(committed.fields):
-            raise lf.LanceDatasetError(
-                f"INSERT query produces {len(df.columns)} columns "
-                f"but the dataset has {len(committed.fields)}"
-            )
-        from pyspark.sql import functions as F2
-
-        df = df.select(
-            *[
-                F2.col(f"`{c}`").alias(fld.name)
-                for c, fld in zip(df.columns, committed.fields)
-            ]
+    # without a column list the query's columns map onto the dataset's
+    # by position, names immaterial
+    names = cols or committed.fieldNames()
+    if len(set(cols)) != len(cols):
+        raise lf.LanceDatasetError(
+            f"duplicate column in INSERT column list {cols}"
         )
-    if cols_str is not None:
-        cols = [c.strip().strip("`") for c in cols_str.split(",")]
-        if any(not re.match(r"^[A-Za-z_]\w*$", c) for c in cols):
-            raise lf.LanceDatasetError(
-                f"malformed INSERT column list {cols_str!r}"
-            )
-        if len(set(cols)) != len(cols):
-            raise lf.LanceDatasetError(
-                f"duplicate column in INSERT column list {cols}"
-            )
-        unknown = sorted(set(cols) - set(committed.fieldNames()))
-        if unknown:
-            raise lf.LanceDatasetError(
-                f"INSERT names unknown columns {unknown}; dataset "
-                f"columns: {committed.fieldNames()}"
-            )
-        if len(cols) != len(df.columns):
-            raise lf.LanceDatasetError(
-                f"INSERT column list names {len(cols)} columns but "
-                f"the query produces {len(df.columns)}"
-            )
-        sel = []
-        for fld in committed.fields:
-            if fld.name in cols:
-                src_col = df.columns[cols.index(fld.name)]
-                sel.append(F.col(f"`{src_col}`").alias(fld.name))
-            else:
-                sel.append(
-                    F.lit(None).cast(fld.dataType).alias(fld.name)
-                )
-        df = df.select(*sel)
+    unknown = sorted(set(cols) - set(committed.fieldNames()))
+    if unknown:
+        raise lf.LanceDatasetError(
+            f"INSERT names unknown columns {unknown}; dataset "
+            f"columns: {committed.fieldNames()}"
+        )
+    if len(names) != len(df.columns):
+        raise lf.LanceDatasetError(
+            f"INSERT column list names {len(cols)} columns but the query "
+            f"produces {len(df.columns)}"
+            if cols
+            else f"INSERT query produces {len(df.columns)} columns but "
+            f"the dataset has {len(names)}"
+        )
+    df = df.select(
+        *[
+            F.col(f"`{df.columns[names.index(fld.name)]}`").alias(fld.name)
+            if fld.name in names
+            else F.lit(None).cast(fld.dataType).alias(fld.name)
+            for fld in committed.fields
+        ]
+    )
     # type discipline: refuse retypes loudly (never silently cast a
     # value column), then conform nullability/metadata to the
     # committed schema — the append contract compares schema JSON
@@ -567,6 +696,24 @@ def _run_insert(spark: SparkSession, sql: str) -> DataFrame | None:
         )
     out = _write_and_count(spark, df, path, "append", None)
     return out.withColumnRenamed("rows_copied", "rows_inserted")
+
+
+def _run_ctas(spark: SparkSession, sql: str, plan) -> DataFrame:
+    """``CREATE [OR REPLACE] TABLE '<path>.lance' AS <select>`` —
+    refuses an existing dataset unless OR REPLACE. Returns one row
+    ``rows_copied``."""
+    name = plan.name()
+    path = _lance_target(name)
+    as_kw = _LEAD_RE.match(sql, _span(name)[1] + 1) if path else None
+    if as_kw is None or as_kw.group(1).upper() != "AS":
+        raise lf.LanceDatasetError(_DML_SYNTAX["CREATE"])
+    if _is_lance_dataset(path) and plan.nodeName() == "CreateTableAsSelect":
+        raise lf.LanceDatasetError(
+            f"CREATE TABLE: dataset {path!r} already exists "
+            "(use CREATE OR REPLACE TABLE to overwrite)"
+        )
+    df = lance_sql(spark, sql[as_kw.end() :].strip().rstrip(";"))
+    return _write_and_count(spark, df, path, "overwrite", None)
 
 
 _DESCRIBE_RE = re.compile(
@@ -631,21 +778,10 @@ def _run_describe(spark: SparkSession, sql: str) -> DataFrame | None:
     if ln.is_native_dataset(path):
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        schema = from_arrow_schema(
-            ln.open_dataset(path).arrow_schema()
+        return _describe_schema(
+            spark, schema=from_arrow_schema(ln.open_dataset(path).arrow_schema())
         )
-    else:
-        from .sources.maintenance import _committed_schema
-
-        schema = _committed_schema(lf.read_manifest(path))
-    return local_frame(
-        spark,
-        [
-            (f.name, f.dataType.simpleString(), f.nullable)
-            for f in schema.fields
-        ],
-        "col_name string, data_type string, nullable boolean",
-    )
+    return _describe_schema(spark, path)
 
 
 _ALTER_START_RE = re.compile(r"(?is)^\s*ALTER\b")
@@ -807,18 +943,7 @@ def _run_alter(spark: SparkSession, sql: str) -> DataFrame | None:
     # its guards (exact-match on existing fields, CAS on the
     # version) apply unchanged
     lf.commit(path, new_json, [], mode="append", merge_schema=True)
-    committed = lf.read_manifest(path)
-    from pyspark.sql.types import StructType as _St
-
-    schema = _St.fromJson(json.loads(committed.schema_json))
-    return local_frame(
-        spark,
-        [
-            (f.name, f.dataType.simpleString(), f.nullable)
-            for f in schema.fields
-        ],
-        "col_name string, data_type string, nullable boolean",
-    )
+    return _describe_schema(spark, path)
 
 
 # ADD COLUMN <name> <type> AS (<expr>): the backfilled single-column
@@ -925,13 +1050,14 @@ def _run_alter_add_backfill(
     return _describe_schema(spark, path)
 
 
-def _describe_schema(spark: SparkSession, path: str) -> DataFrame:
-    """The committed schema in DESCRIBE shape — the ALTER verbs'
-    shared return value."""
-    from pyspark.sql.types import StructType as _St
-
-    committed = lf.read_manifest(path)
-    schema = _St.fromJson(json.loads(committed.schema_json))
+def _describe_schema(
+    spark: SparkSession, path: str | None = None, schema=None
+) -> DataFrame:
+    """A schema in DESCRIBE shape — the committed schema at ``path``
+    unless ``schema`` is given; DESCRIBE's and the ALTER verbs' shared
+    return value."""
+    if schema is None:
+        schema = maintenance._committed_schema(lf.read_manifest(path))
     return local_frame(
         spark,
         [
@@ -1121,52 +1247,11 @@ def _run_alter_drop(
         expected_version=manifest.version,
         drop_columns=names,
     )
-    committed = lf.read_manifest(path)
-    from pyspark.sql.types import StructType as _St
-
-    schema = _St.fromJson(json.loads(committed.schema_json))
-    return local_frame(
-        spark,
-        [
-            (f.name, f.dataType.simpleString(), f.nullable)
-            for f in schema.fields
-        ],
-        "col_name string, data_type string, nullable boolean",
-    )
-
-
-def _run_delete(spark: SparkSession, sql: str) -> DataFrame | None:
-    """``DELETE FROM '<path>.lance' WHERE <predicate>`` — the
-    predicate is any Spark SQL boolean expression over the dataset's
-    columns, lowered onto deletion vectors (O(matches) metadata,
-    fragment files untouched; maintenance.delete_where_sql). An
-    unbounded DELETE (no WHERE) is refused — drop or overwrite the
-    dataset explicitly instead. Returns one row ``rows_deleted``."""
-    if not _DELETE_START_RE.match(sql):
-        return None
-    m = _DELETE_RE.match(sql)
-    if m is None:
-        raise lf.LanceDatasetError(
-            "unsupported DELETE syntax; supported: DELETE FROM "
-            "'<path>.lance' WHERE <spark-sql predicate> (an unbounded "
-            "DELETE without WHERE is refused — overwrite the dataset "
-            "explicitly if you mean delete-everything)"
-        )
-    path = m.group("path")
-    _require_dml_target(path, "DELETE FROM")
-    from .sources.maintenance import delete_where_sql
-
-    n = delete_where_sql(spark, path, m.group("pred"))
-    return local_frame(spark, [(n,)], "rows_deleted long")
+    return _describe_schema(spark, path)
 
 
 # ------------------------------------------------------------ MERGE
 
-_MERGE_START_RE = re.compile(r"(?is)^\s*MERGE\b")
-_MERGE_HEAD_RE = re.compile(
-    r"(?is)^\s*MERGE\s+INTO\s+(['\"`])(?P<path>[^'\"`]+\.lance)\1"
-    r"\s+(?:AS\s+)?(?P<talias>[A-Za-z_]\w*)\s+USING\s+"
-)
 _MERGE_DIALECT = (
     "MERGE INTO '<path>.lance' [AS] t USING (<select>) | "
     "'<src>.lance' [AS] s ON t.<col> = s.<col> followed by ordered "
@@ -1180,130 +1265,6 @@ _MERGE_DIALECT = (
     "and SET/VALUES expressions are Spark SQL over alias-qualified "
     "columns (t.<col> = old target row, s.<col> = source row)"
 )
-
-
-def _scan_balanced(s: str, i: int) -> int:
-    """Index of the ')' matching the '(' at ``s[i]``, quote-aware
-    (the same discipline as ``_split_copy_to``'s inline scanner);
-    -1 when unbalanced."""
-    depth, j, in_str = 0, i, None
-    while j < len(s):
-        c = s[j]
-        if in_str:
-            if c == in_str:
-                in_str = None
-        elif c in "'\"":
-            in_str = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return j
-        j += 1
-    return -1
-
-
-def _split_top_keyword(s: str, kw: str) -> list[str]:
-    """Split ``s`` on the SQL keyword ``kw`` (case-insensitive, word
-    boundaries) occurring OUTSIDE quotes and parentheses — the
-    keyword-level analogue of ``_split_top_level_commas``, so a
-    condition like ``s.note = 'then what'`` never splits a MERGE
-    clause."""
-    out, last, depth, in_str = [], 0, 0, None
-    i, n, k = 0, len(s), len(kw)
-    while i < n:
-        c = s[i]
-        if in_str:
-            if c == in_str:
-                in_str = None
-            i += 1
-            continue
-        if c in "'\"":
-            in_str = c
-            i += 1
-            continue
-        if c == "(":
-            depth += 1
-            i += 1
-            continue
-        if c == ")":
-            depth -= 1
-            i += 1
-            continue
-        if (
-            depth == 0
-            and s[i : i + k].lower() == kw
-            and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_"))
-            and (
-                i + k >= n
-                or not (s[i + k].isalnum() or s[i + k] == "_")
-            )
-        ):
-            out.append(s[last:i])
-            last = i + k
-            i += k
-            continue
-        i += 1
-    out.append(s[last:])
-    return out
-
-
-def _rewrite_aliases(
-    expr: str,
-    prefixes: dict[str, str],
-    renames: dict[str, dict[str, str]] | None = None,
-) -> str:
-    """Rewrite alias-qualified column references (``t.col`` →
-    `` `__t_col` ``) outside string literals, so MERGE conditions
-    and SET expressions evaluate against the joined
-    ``__t_*``/``__s_*`` frame. ``prefixes`` maps lowercase alias →
-    physical prefix; ``renames`` optionally maps an alias's column
-    names (the USING key rename). References the rewriter does not
-    recognize pass through and fail Spark analysis loudly."""
-    pat = re.compile(r"([A-Za-z_]\w*)\s*\.\s*(`[^`]+`|[A-Za-z_]\w*)")
-    out: list[str] = []
-    i, n = 0, len(expr)
-    in_str = None
-    while i < n:
-        c = expr[i]
-        if in_str:
-            out.append(c)
-            if c == in_str:
-                in_str = None
-            i += 1
-            continue
-        if c in "'\"":
-            in_str = c
-            out.append(c)
-            i += 1
-            continue
-        boundary = i == 0 or not (
-            expr[i - 1].isalnum() or expr[i - 1] in "_.`"
-        )
-        m = pat.match(expr, i) if boundary else None
-        if m and m.group(1).lower() in prefixes:
-            alias = m.group(1).lower()
-            col = m.group(2)
-            if col.startswith("`"):
-                col = col[1:-1]
-            col = (renames or {}).get(alias, {}).get(col, col)
-            out.append(f"`{prefixes[alias]}{col}`")
-            i = m.end()
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out)
-
-
-def _references_alias(expr: str, alias: str) -> bool:
-    """True when ``expr`` contains an ``alias.col`` reference
-    outside string literals — used to refuse target references in a
-    NOT MATCHED condition (no target row exists there) and source
-    references in a BY SOURCE condition."""
-    marker = "\0REF\0"
-    rewritten = _rewrite_aliases(expr, {alias.lower(): marker})
-    return marker in rewritten
 
 
 def _require_dml_target(path: str, verb: str) -> None:
@@ -1334,280 +1295,163 @@ def _merge_err(msg: str) -> "lf.LanceDatasetError":
     )
 
 
-def _parse_merge(sql: str) -> dict | None:
-    """Parse the supported MERGE dialect into an ordered clause list
-    (first match wins, ANSI semantics): conditional ``WHEN [NOT]
-    MATCHED AND <cond>``, column-level ``UPDATE SET col = expr``,
-    ``UPDATE SET *``, ``DELETE``, ``INSERT *``, and ``WHEN NOT
-    MATCHED BY SOURCE [AND <cond>] THEN DELETE``. Returns None when
-    the statement is not a MERGE at all; raises loudly (never
-    silently narrows semantics) on anything outside the dialect —
-    INSERT column lists/VALUES, BY SOURCE UPDATE/INSERT,
-    non-equality ON, unreachable clauses after an unconditional one
-    of the same kind — per the refusal contract the COPY option
-    parser set."""
-    if not _MERGE_START_RE.match(sql):
-        return None
-    m = _MERGE_HEAD_RE.match(sql)
-    if m is None:
+def _merge_spec(sql: str, plan) -> dict:
+    """Read the supported MERGE dialect off Spark's parsed
+    ``MergeIntoTable``: target and source (a `` `<path>.lance` ``
+    relation or the exact text between the USING parentheses), the
+    single ``t.<col> = s.<col>`` key equality, and merge_apply's three
+    clause lists (matched, not matched, not matched by source) in
+    statement order, each condition and SET/VALUES value rewritten from
+    ``t.<col>``/``s.<col>`` onto the joined frame's physical names.
+    Spark's grammar already refuses the
+    actions a branch cannot take and unconditional clauses that are not
+    last (``_parse_refusal`` words those errors in the dialect); this
+    refuses what it accepts but the dialect does not — no target alias,
+    WITH SCHEMA EVOLUTION, equal aliases, any other ON condition, SET
+    of a non-target column, duplicate or qualified column names."""
+    target, source = plan.targetTable(), plan.sourceTable()
+    if plan.withSchemaEvolution() or target.nodeName() != "SubqueryAlias":
         raise _merge_err("unsupported MERGE INTO head")
-    path, talias = m.group("path"), m.group("talias")
-    rest = sql[m.end():]
-    src_path = src_select = None
-    m2 = re.match(r"(?s)^\s*(['\"`])([^'\"`]+\.lance)\1", rest)
-    if m2:
-        src_path = m2.group(2)
-        rest = rest[m2.end():]
-    else:
-        lp = re.match(r"(?s)^\s*\(", rest)
-        if not lp:
-            raise _merge_err(
-                "MERGE USING must name a '<path>.lance' dataset or a "
-                "parenthesized subquery"
-            )
-        i = lp.end() - 1
-        j = _scan_balanced(rest, i)
-        if j < 0:
-            raise _merge_err("unbalanced parentheses in MERGE USING")
-        src_select = rest[i + 1 : j]
-        rest = rest[j + 1 :]
-    m3 = re.match(r"(?is)^\s*(?:AS\s+)?([A-Za-z_]\w*)\s+ON\s+", rest)
-    if not m3:
+    path = _lance_target(target.child())
+    if path is None:
+        raise _merge_err("unsupported MERGE INTO head")
+    if source.nodeName() != "SubqueryAlias":
         raise _merge_err("MERGE requires a source alias and an ON clause")
-    salias = m3.group(1)
+    talias, salias = target.alias(), source.alias()
     if salias.lower() == talias.lower():
         raise _merge_err(
             f"target and source aliases are both {salias!r}; they must "
             "differ so the ON columns resolve"
         )
-    rest = rest[m3.end():]
-    wm = re.search(r"(?i)\bWHEN\b", rest)
-    if not wm:
-        raise _merge_err("MERGE requires at least one WHEN clause")
-    on = rest[: wm.start()].strip()
-    om = re.match(
-        r"(?s)^([A-Za-z_]\w*)\.([A-Za-z_]\w*)\s*=\s*"
-        r"([A-Za-z_]\w*)\.([A-Za-z_]\w*)$",
-        on,
-    )
-    if not om:
+    cond = plan.mergeCondition()
+    on = _Slice(sql, cond)
+    sides = [
+        _jlist(c.nameParts())
+        for c in _jlist(cond.children())
+        if c.nodeName() == "UnresolvedAttribute"
+    ]
+    if cond.nodeName() != "EqualTo" or len(sides) != 2 or any(
+        len(p) != 2 for p in sides
+    ):
         raise _merge_err(
-            f"unsupported ON condition {on!r}: exactly one qualified "
+            f"unsupported ON condition {on.text()!r}: exactly one qualified "
             "equality t.<col> = s.<col> is supported (no AND chains, "
             "no expressions)"
         )
-    a_al, a_col, b_al, b_col = om.groups()
-    aliases = {a_al.lower(): a_col, b_al.lower(): b_col}
-    if set(aliases) != {talias.lower(), salias.lower()}:
+    src_path = _lance_target(source.child())
+    src_select = None
+    if src_path is None:
+        lp = sql.find("(", _span(target.child())[1] + 1, on.lo)
+        rp = sql.rfind(")", 0, on.lo)
+        if lp < 0 or rp < lp:
+            raise _merge_err(
+                "MERGE USING must name a '<path>.lance' dataset or a "
+                "parenthesized subquery"
+            )
+        src_select = sql[lp + 1 : rp]
+    keys = {p[0].lower(): p[1] for p in sides}
+    ta, sa = talias.lower(), salias.lower()
+    if set(keys) != {ta, sa}:
         raise _merge_err(
-            f"ON condition {on!r} must reference both aliases "
+            f"ON condition {on.text()!r} must reference both aliases "
             f"{talias!r} and {salias!r}"
         )
-    key_t = aliases[talias.lower()]
-    key_s = aliases[salias.lower()]
-    clauses: list[dict] = []
-    unconditional_seen: set[str] = set()
-    segs = _split_top_keyword(rest[wm.start():], "when")[1:]
-    if not segs:
-        raise _merge_err("MERGE requires at least one WHEN clause")
-    for seg in segs:
-        seg = seg.strip().rstrip(";").strip()
-        halves = _split_top_keyword(seg, "then")
-        if len(halves) != 2:
-            raise _merge_err(
-                f"malformed WHEN clause {seg!r}: expected exactly one "
-                "THEN (CASE expressions inside MERGE conditions are "
-                "not supported)"
+    key_t, key_s = keys[ta], keys[sa]
+    renames = {sa: {key_s: key_t}} if key_s != key_t else {}
+    # per branch: the aliases its expressions may reference, with their
+    # prefix in the joined frame, and the side with no row there
+    branches = (
+        ("matched", plan.matchedActions(), {ta: "__t_", sa: "__s_"}, None),
+        ("not_matched", plan.notMatchedActions(), {sa: ""},
+         ("target", talias, "not-matched", "VALUES")),
+        ("not_matched_by_source", plan.notMatchedBySourceActions(),
+         {ta: "__t_"}, ("source", salias, "by-source", "SET")),
+    )
+    clauses = {}
+    for when, actions, prefixes, absent in branches:
+        clauses[when] = []
+        for act in _jlist(actions):
+            kind, c = act.nodeName(), act.condition()
+            cond = _Slice(sql, c.get()) if c.isDefined() else None
+            sets = (
+                _merge_sets(sql, act, talias)
+                if kind in ("UpdateAction", "InsertAction")
+                else None
             )
-        head, act_str = halves[0].strip(), halves[1].strip()
-        hm = re.match(
-            r"(?is)^(?:(?P<neg>NOT)\s+)?MATCHED"
-            r"(?:\s+BY\s+(?P<by>SOURCE|TARGET))?"
-            r"(?:\s+AND\s+(?P<cond>.+))?$",
-            head,
-        )
-        if hm is None:
-            raise _merge_err(f"unsupported MERGE clause: WHEN {head!r}")
-        neg, by = hm.group("neg"), (hm.group("by") or "").upper()
-        cond = (hm.group("cond") or "").strip() or None
-        if neg is None:
-            if by:
+            side, alias, branch, values = absent or (None, "", "", "")
+            for label, expr in [("condition", cond)] + [
+                (f"{values} expression for {col!r}", v)
+                for col, v in (sets or {}).items()
+            ]:
+                if side and expr is not None and expr.uses(alias.lower()):
+                    raise _merge_err(
+                        f"WHEN {when.replace('_', ' ').upper()} {label} "
+                        f"{expr.text()!r} references the {side} alias "
+                        f"{alias!r}; no {side} row exists in the {branch} "
+                        "branch"
+                    )
+            if when == "not_matched" and sets is not None and key_t not in sets:
                 raise _merge_err(
-                    f"WHEN MATCHED BY {by} is not a MERGE clause"
+                    f"INSERT column list must assign the merge key {key_t!r} "
+                    "(NULL-keyed inserts are refused — the upsert contract)"
                 )
-            when = "matched"
-        elif by == "SOURCE":
-            when = "not_matched_by_source"
-        else:
-            when = "not_matched"
-        if when in unconditional_seen:
-            raise _merge_err(
-                f"unreachable (duplicate) WHEN clause {seg!r}: an "
-                "earlier unconditional clause of the same kind always "
-                "applies first"
-            )
-        if cond is None:
-            unconditional_seen.add(when)
-        # ---- action
-        def _parse_sets(sets_str: str) -> dict:
-            sets: dict[str, str] = {}
-            for part in _split_top_level_commas(sets_str):
-                am = re.match(
-                    r"(?s)^\s*(?:([A-Za-z_]\w*)\s*\.\s*)?"
-                    r"([A-Za-z_]\w*)\s*=\s*(.+?)\s*$",
-                    part,
-                )
-                if am is None:
-                    raise _merge_err(
-                        f"malformed SET assignment {part.strip()!r}; "
-                        "expected [t.]<col> = <spark-sql expr>"
-                    )
-                qual, col, rhs = am.groups()
-                if qual is not None and qual.lower() != talias.lower():
-                    raise _merge_err(
-                        f"SET assigns {qual}.{col}, but only the "
-                        f"target alias {talias!r} can be assigned"
-                    )
-                if col in sets:
-                    raise _merge_err(
-                        f"duplicate SET assignment for column {col!r}"
-                    )
-                sets[col] = rhs
-            return sets
-
-        um = re.match(r"(?is)^UPDATE\s+SET\s+(?P<sets>.+)$", act_str)
-        im = re.match(r"(?is)^INSERT\s*(?=\()", act_str)
-        if re.match(r"(?is)^DELETE$", act_str):
-            if when == "not_matched":
-                raise _merge_err(
-                    "WHEN NOT MATCHED cannot DELETE: no target row "
-                    "exists in the not-matched branch"
-                )
-            clauses.append(
-                {"when": when, "cond": cond, "action": "delete",
-                 "sets": None}
-            )
-        elif um is not None:
-            if when == "not_matched":
-                raise _merge_err(
-                    "WHEN NOT MATCHED cannot UPDATE: no target row "
-                    "exists in the not-matched branch (use INSERT)"
-                )
-            sets_str = um.group("sets").strip()
-            if sets_str == "*":
-                if when == "not_matched_by_source":
-                    raise _merge_err(
-                        "WHEN NOT MATCHED BY SOURCE cannot UPDATE "
-                        "SET * : no source row exists to replace "
-                        "from — assign explicit columns"
-                    )
-                sets = None
-            else:
-                sets = _parse_sets(sets_str)
-            clauses.append(
-                {"when": when, "cond": cond, "action": "update",
-                 "sets": sets}
-            )
-        elif re.match(r"(?is)^INSERT\s*\*$", act_str):
+            out = {
+                "cond": cond.text(prefixes, renames) if cond else None,
+                "sets": None
+                if sets is None
+                else {col: v.text(prefixes, renames) for col, v in sets.items()},
+            }
             if when != "not_matched":
-                raise _merge_err(
-                    "WHEN NOT MATCHED BY SOURCE cannot INSERT (no "
-                    "source row exists in the by-source branch)"
-                    if when == "not_matched_by_source"
-                    else "WHEN MATCHED cannot INSERT"
-                )
-            clauses.append(
-                {"when": when, "cond": cond, "action": "insert",
-                 "sets": None}
-            )
-        elif im is not None:
-            # INSERT (col, ...) VALUES (expr, ...) — r11, the Delta/
-            # ANSI column-list form the reference's host engine
-            # (DuckDB) accepts; unassigned columns null-fill
-            if when != "not_matched":
-                raise _merge_err(
-                    "WHEN NOT MATCHED BY SOURCE cannot INSERT (no "
-                    "source row exists in the by-source branch)"
-                    if when == "not_matched_by_source"
-                    else "WHEN MATCHED cannot INSERT"
-                )
-            i0 = act_str.index("(")
-            j0 = _scan_balanced(act_str, i0)
-            if j0 < 0:
-                raise _merge_err(
-                    "unbalanced parentheses in INSERT column list"
-                )
-            cols = [
-                c.strip().strip("`")
-                for c in _split_top_level_commas(act_str[i0 + 1 : j0])
-            ]
-            tail = act_str[j0 + 1 :].strip()
-            vm = re.match(r"(?is)^VALUES\s*(?=\()", tail)
-            if vm is None:
-                raise _merge_err(
-                    "INSERT with a column list requires VALUES "
-                    "(<expr>, ...)"
-                )
-            i1 = tail.index("(")
-            j1 = _scan_balanced(tail, i1)
-            if j1 < 0 or tail[j1 + 1 :].strip():
-                raise _merge_err(
-                    "unbalanced parentheses or trailing text after "
-                    "INSERT ... VALUES (...)"
-                )
-            vals = [
-                v.strip()
-                for v in _split_top_level_commas(tail[i1 + 1 : j1])
-            ]
-            if len(cols) != len(vals):
-                raise _merge_err(
-                    f"INSERT column list names {len(cols)} columns "
-                    f"but VALUES supplies {len(vals)} expressions"
-                )
-            bad = [c for c in cols if not re.match(r"^[A-Za-z_]\w*$", c)]
-            if bad:
-                raise _merge_err(
-                    f"malformed INSERT column name(s) {bad}"
-                )
-            sets = {}
-            for c, v in zip(cols, vals):
-                if c in sets:
-                    raise _merge_err(
-                        f"duplicate INSERT column {c!r}"
-                    )
-                sets[c] = v
-            clauses.append(
-                {"when": when, "cond": cond, "action": "insert",
-                 "sets": sets}
-            )
-        else:
-            raise _merge_err(
-                f"unsupported MERGE action {act_str!r}"
-            )
+                out["action"] = "delete" if kind == "DeleteAction" else "update"
+            clauses[when].append(out)
     return {
         "path": path,
         "src_path": src_path,
         "src_select": src_select,
         "key_t": key_t,
         "key_s": key_s,
-        "talias": talias,
-        "salias": salias,
         "clauses": clauses,
     }
 
 
-def _run_merge(spark: SparkSession, parsed: dict) -> DataFrame:
-    """Lower a parsed MERGE onto maintenance.merge_apply — the
-    per-row, first-match-wins clause engine that publishes the whole
-    statement as ONE new version (atomic: a crash or concurrent
-    reader sees pre- or post-merge state, never a half-applied mix).
-    Conditions and SET right-hand sides are rewritten from
-    alias-qualified references (t.<col> = OLD target row, s.<col> =
-    source row) onto the joined frame's physical names; duplicate
-    source rows for a matched target key raise the ANSI cardinality
-    error. Returns one row (rows_updated, rows_inserted,
-    rows_deleted) counting TARGET rows updated/deleted and SOURCE
-    rows inserted.
+def _merge_sets(sql: str, action, talias: str) -> dict:
+    """{column: value slice} of an UPDATE SET or INSERT (..) VALUES
+    action; SET may name the target alias, INSERT columns are bare."""
+    insert = action.nodeName() == "InsertAction"
+    sets: dict[str, _Slice] = {}
+    for a in _jlist(action.assignments()):
+        parts = _jlist(a.key().nameParts())
+        value = _Slice(sql, a.value())
+        if insert and len(parts) != 1:
+            raise _merge_err(f"malformed INSERT column name(s) {['.'.join(parts)]}")
+        if len(parts) > 2:
+            raise _merge_err(
+                f"malformed SET assignment {'.'.join(parts)} = "
+                f"{value.text()!r}; expected [t.]<col> = <spark-sql expr>"
+            )
+        if len(parts) == 2 and parts[0].lower() != talias.lower():
+            raise _merge_err(
+                f"SET assigns {parts[0]}.{parts[1]}, but only the target "
+                f"alias {talias!r} can be assigned"
+            )
+        if parts[-1] in sets:
+            raise _merge_err(
+                f"duplicate {'INSERT column' if insert else 'SET assignment for column'} "
+                f"{parts[-1]!r}"
+            )
+        sets[parts[-1]] = value
+    return sets
+
+
+def _run_merge(spark: SparkSession, sql: str, plan) -> DataFrame:
+    """Lower a parsed MERGE (``_merge_spec``) onto
+    maintenance.merge_apply — the per-row, first-match-wins clause
+    engine that publishes the whole statement as ONE new version
+    (atomic: a crash or concurrent reader sees pre- or post-merge
+    state, never a half-applied mix); duplicate source rows for a
+    matched target key raise the ANSI cardinality error. Returns one
+    row (rows_updated, rows_inserted, rows_deleted) counting TARGET
+    rows updated/deleted and SOURCE rows inserted.
 
     Dialect restriction, enforced loudly: NULL-keyed SOURCE rows are
     REFUSED whenever an INSERT clause exists (the upsert contract)
@@ -1631,8 +1475,8 @@ def _run_merge(spark: SparkSession, parsed: dict) -> DataFrame:
     the manifest inside merge_apply, which Spark plans per-position
     — the join graph never references a lance relation."""
     from .materialize import release_spill, spill_to_parquet
-    from .sources.maintenance import merge_apply
 
+    parsed = _merge_spec(sql, plan)
     path = parsed["path"]
     _require_dml_target(path, "MERGE INTO")
     if parsed["src_path"] is not None:
@@ -1643,20 +1487,6 @@ def _run_merge(spark: SparkSession, parsed: dict) -> DataFrame:
             )
         src = spark.read.format("lance").load(parsed["src_path"])
     else:
-        # the USING subquery re-enters lance_sql for its replacement
-        # scans; a nested write/DML statement smuggled there would
-        # EXECUTE (COPY/CTAS/MERGE/DELETE/UPDATE/VACUUM/OPTIMIZE all
-        # dispatch before the read-path rewrite) — refuse anything
-        # that is not a plain query
-        if re.match(
-            r"(?is)^\s*(COPY|CREATE|MERGE|DELETE|UPDATE|VACUUM|"
-            r"OPTIMIZE|INSERT|ALTER)\b",
-            parsed["src_select"],
-        ):
-            raise lf.LanceDatasetError(
-                "MERGE USING takes a read-only subquery; nested "
-                "write/DML statements are refused"
-            )
         # merge_apply evaluates the source in SEVERAL separate jobs
         # (profile aggregate, dup-key probe, classification joins,
         # survivor rewrite, insert anti-join). A nondeterministic
@@ -1681,7 +1511,6 @@ def _run_merge(spark: SparkSession, parsed: dict) -> DataFrame:
             )
         src = lance_sql(spark, parsed["src_select"])
     key = parsed["key_t"]
-    renames: dict[str, dict[str, str]] = {}
     if parsed["key_s"] != key:
         if key in src.columns:
             raise lf.LanceDatasetError(
@@ -1690,93 +1519,6 @@ def _run_merge(spark: SparkSession, parsed: dict) -> DataFrame:
                 "onto it"
             )
         src = src.withColumnRenamed(parsed["key_s"], key)
-        renames[parsed["salias"].lower()] = {parsed["key_s"]: key}
-
-    talias, salias = parsed["talias"].lower(), parsed["salias"].lower()
-    both = {talias: "__t_", salias: "__s_"}
-    matched_clauses: list[dict] = []
-    sync_clauses: list[dict] = []
-    insert_clauses: list[dict] = []
-    for c in parsed["clauses"]:
-        cond = c["cond"]
-        if c["when"] == "matched":
-            sets = c["sets"]
-            if sets is not None:
-                sets = {
-                    col: _rewrite_aliases(rhs, both, renames)
-                    for col, rhs in sets.items()
-                }
-            matched_clauses.append(
-                {
-                    "cond": _rewrite_aliases(cond, both, renames)
-                    if cond
-                    else None,
-                    "action": c["action"],
-                    "sets": sets,
-                }
-            )
-        elif c["when"] == "not_matched":
-            for label, expr in [("condition", cond)] + [
-                (f"VALUES expression for {col!r}", rhs)
-                for col, rhs in (c["sets"] or {}).items()
-            ]:
-                if expr is not None and _references_alias(expr, talias):
-                    raise _merge_err(
-                        f"WHEN NOT MATCHED {label} {expr!r} references "
-                        f"the target alias {parsed['talias']!r}; no "
-                        "target row exists in the not-matched branch"
-                    )
-            sets = c["sets"]
-            if sets is not None:
-                if key not in sets:
-                    raise _merge_err(
-                        f"INSERT column list must assign the merge "
-                        f"key {key!r} (NULL-keyed inserts are refused "
-                        "— the upsert contract)"
-                    )
-                sets = {
-                    col: _rewrite_aliases(rhs, {salias: ""}, renames)
-                    for col, rhs in sets.items()
-                }
-            insert_clauses.append(
-                {
-                    "cond": _rewrite_aliases(
-                        cond, {salias: ""}, renames
-                    )
-                    if cond
-                    else None,
-                    "sets": sets,
-                }
-            )
-        else:  # not_matched_by_source
-            for label, expr in [("condition", cond)] + [
-                (f"SET expression for {col!r}", rhs)
-                for col, rhs in (c["sets"] or {}).items()
-            ]:
-                if expr is not None and _references_alias(expr, salias):
-                    raise _merge_err(
-                        f"WHEN NOT MATCHED BY SOURCE {label} {expr!r} "
-                        f"references the source alias "
-                        f"{parsed['salias']!r}; no source row exists "
-                        "in the by-source branch"
-                    )
-            sets = c["sets"]
-            if sets is not None:
-                sets = {
-                    col: _rewrite_aliases(rhs, {talias: "__t_"}, renames)
-                    for col, rhs in sets.items()
-                }
-            sync_clauses.append(
-                {
-                    "cond": _rewrite_aliases(
-                        cond, {talias: "__t_"}, renames
-                    )
-                    if cond
-                    else None,
-                    "action": c["action"],
-                    "sets": sets,
-                }
-            )
 
     # The spill guards against Spark 4.1's Python-DS relation-
     # cloning hazard (docstring above) and against a source lazily
@@ -1795,9 +1537,10 @@ def _run_merge(spark: SparkSession, parsed: dict) -> DataFrame:
     if needs_spill:
         src = spill_to_parquet(src, "merge-src")
     try:
-        n_upd, n_ins, n_del = merge_apply(
-            spark, path, src, key, matched_clauses, insert_clauses,
-            sync_clauses,
+        clauses = parsed["clauses"]
+        n_upd, n_ins, n_del = maintenance.merge_apply(
+            spark, path, src, key, clauses["matched"],
+            clauses["not_matched"], clauses["not_matched_by_source"],
         )
     finally:
         if needs_spill:
@@ -1816,8 +1559,7 @@ _COPY_CODECS = frozenset({"zstd", "snappy", "gzip", "none"})
 
 
 def _split_quote_aware(s: str, sep: str = ",") -> list[str]:
-    """Split on ``sep`` outside single/double quotes — the same
-    discipline ``_split_copy_to`` applies to the SELECT body. A bare
+    """Split on ``sep`` outside single/double quotes: a bare
     ``split(',')`` would break a quoted value containing a comma."""
     out, buf, in_str = [], [], ""
     for c in s:
@@ -2318,57 +2060,35 @@ def lance_sql(spark: SparkSession, sql: str) -> DataFrame:
     (cpp/lance_replacement.cpp: any table name ending ``.lance``
     becomes a scan of that dataset).
 
-    WRITE-path sugar (reference cpp/lance_copy.cpp:1-251 — the COPY
-    function registered as ``COPY ... TO 'x.lance' (FORMAT lance)``):
+    Statements that write or describe a dataset:
 
-    - ``COPY (<select>) TO '<path>.lance' [(FORMAT LANCE, MODE
-      'append'|'overwrite', COMPRESSION '<codec>')]`` runs the SELECT
-      (with the same read-side rewriting) and writes it as a lance
-      dataset — default MODE overwrite, matching DuckDB COPY TO
-      replacing the target. Returns one row ``rows_copied``.
-    - ``CREATE [OR REPLACE] TABLE '<path>.lance' AS <select>`` is the
-      CTAS spelling: refuses if the dataset exists unless OR REPLACE.
-    - ``MERGE INTO '<path>.lance' [AS] t USING (<select>) [AS] s ON
-      t.<col> = s.<col>`` followed by ordered WHEN clauses (first
-      match wins): ``WHEN MATCHED [AND <cond>] THEN UPDATE SET * |
-      UPDATE SET col = <expr>[, ...] | DELETE``, ``WHEN NOT MATCHED
-      [AND <cond>] THEN INSERT *``, ``WHEN NOT MATCHED BY SOURCE
-      [AND <cond>] THEN DELETE`` — the per-row clause engine
-      (sources/maintenance.merge_apply): conditions and SET
-      right-hand sides are Spark SQL over ``t.<col>`` (old target
-      row) / ``s.<col>`` (source row), duplicate matched source
-      keys raise the ANSI cardinality error, and the whole
-      statement commits as ONE version. Out-of-dialect forms
-      (INSERT column lists/VALUES, BY SOURCE UPDATE/INSERT,
-      unreachable clauses) are refused loudly. Returns one row
-      (rows_updated, rows_inserted, rows_deleted).
-    - ``DELETE FROM '<path>.lance' WHERE <predicate>`` lowers onto
-      deletion vectors with the predicate evaluated by Spark SQL
-      (maintenance.delete_where_sql); unbounded DELETE is refused.
-      Returns one row ``rows_deleted``.
-    - ``UPDATE '<path>.lance' SET col = <expr>[, ...] [WHERE
-      <pred>]`` lowers onto a fragment-pruned rewrite — only hit
-      fragments rewrite, expressions evaluate against the OLD row
-      (maintenance.update_where_sql). Returns one row
-      ``rows_updated``.
-    - ``INSERT INTO '<path>.lance' [(col, ...)] <select | VALUES
-      ...>`` appends one new version — positional SQL semantics,
-      column-list null-fill (_run_insert). Returns one row
-      ``rows_inserted``.
-    - ``DESCRIBE [HISTORY] '<path>.lance'`` — schema rows / the
-      version chain (_run_describe).
-    - ``SELECT <id_col>, <cosine_fn>(<vec_col>, [<floats>]) AS s
-      FROM '<path>.lance' [WHERE <pred>] ORDER BY s DESC LIMIT k``
-      — the DuckDB-UX ANN spelling, served from the persisted IVF
-      index (bucket-pruned; pre-filtered when WHERE is present;
-      deletion-aware). Loud refusal when no index exists or the
-      metric/shape doesn't match (_run_ann).
-    - ``SELECT <id_col>, match_bm25(<text_col>, '<terms>') AS s
-      FROM '<path>.lance' [WHERE <pred>] ORDER BY s DESC LIMIT k``
-      — the DuckDB-FTS-extension spelling, served from the
-      dataset-attached inverted index with the same ladder
-      (term-bucket pruning, WHERE pre-filter, deletion-aware;
-      _run_fts).
+    - MERGE, UPDATE, DELETE, INSERT and ``CREATE [OR REPLACE] TABLE
+      '<path>.lance' AS <select>`` are parsed by Spark's own SQL
+      parser, as the reference's DML is its host engine's (DuckDB's)
+      grammar: quoted target and source paths become backtick
+      identifiers, and each condition, value and query is the exact
+      statement text of its parsed node (``_run_dml``). The verbs
+      lower onto maintenance.merge_apply (per-row first-match-wins
+      clauses over ``t.<col>``/``s.<col>``, one version per
+      statement; dialect in ``_MERGE_DIALECT``), update_where_sql
+      (fragment-pruned rewrite, expressions see the OLD row),
+      delete_where_sql (deletion vectors; unbounded DELETE refused)
+      and the lance writer (INSERT appends one version, CTAS refuses
+      an existing dataset unless OR REPLACE). Forms Spark accepts but
+      the dialect does not (target aliases on UPDATE/DELETE,
+      OVERWRITE, PARTITION, BY NAME) and Spark parse errors are
+      refused as ``LanceDatasetError``. Each returns one row of counts.
+    - Spark has no grammar for the rest, so each keeps its own
+      matcher: ``COPY (<select>) TO '<path>.lance' [(FORMAT LANCE,
+      MODE 'append'|'overwrite', COMPRESSION '<codec>')]`` (the
+      reference's COPY function, cpp/lance_copy.cpp; default MODE
+      overwrite), ``ALTER TABLE`` (its ``USING (<expr>)`` and ``ADD
+      COLUMN ... AS (<expr>)`` forms are not Spark SQL), ``VACUUM``,
+      ``OPTIMIZE``, ``DESCRIBE [HISTORY]``, and the index-served
+      sugar ``SELECT <id>, <cosine_fn>(<vec>, [<floats>]) AS s FROM
+      '<path>.lance' [WHERE ..] ORDER BY s DESC LIMIT k`` (_run_ann)
+      and the same shape over ``match_bm25(<text>, '<terms>')``
+      (_run_fts).
 
     Each distinct quoted ``.lance`` path that exists on disk is
     registered as a deterministic temp view and the literal is
@@ -2385,60 +2105,34 @@ def lance_sql(spark: SparkSession, sql: str) -> DataFrame:
     queries sharing a session."""
     ds.register(spark)
 
-    def _read_only(body: str, verb: str) -> str:
-        # the body re-enters lance_sql, whose dispatch would EXECUTE
-        # a smuggled write/DDL statement before the read-path rewrite
-        # (the same guard INSERT INTO and MERGE USING apply)
-        if re.match(
-            r"(?is)^\s*(COPY|CREATE|MERGE|DELETE|UPDATE|VACUUM|"
-            r"OPTIMIZE|INSERT|ALTER)\b",
-            body,
-        ):
+    copy = _COPY_RE.match(sql)
+    if copy is not None:
+        select, path = copy.group("select"), copy.group("path")
+        opts = _copy_options(copy.group("opts") or "")
+        # the body re-enters lance_sql, whose dispatch would EXECUTE a
+        # smuggled write/DDL statement before the read-path rewrite
+        lead = _LEAD_RE.match(select)
+        if lead and lead.group(1).upper() in _WRITE_VERBS:
             raise lf.LanceDatasetError(
-                f"{verb} takes a read-only query; nested write/DDL "
+                "COPY (...) TO takes a read-only query; nested write/DDL "
                 "statements are refused"
             )
-        return body
-
-    copy = _split_copy_to(sql)
-    if copy is not None:
-        select, path, opts_str = copy
-        opts = _copy_options(opts_str)
-        df = lance_sql(spark, _read_only(select, "COPY (...) TO"))
+        df = lance_sql(spark, select)
         return _write_and_count(
             spark, df, path,
             opts.get("mode", "overwrite"), opts.get("compression"),
         )
-    ctas = _CTAS_RE.match(sql)
-    if ctas is not None:
-        path = ctas.group("path")
-        if _is_lance_dataset(path) and not ctas.group("replace"):
-            raise lf.LanceDatasetError(
-                f"CREATE TABLE: dataset {path!r} already exists "
-                "(use CREATE OR REPLACE TABLE to overwrite)"
-            )
-        df = lance_sql(
-            spark, _read_only(ctas.group("select"), "CREATE TABLE AS")
-        )
-        return _write_and_count(spark, df, path, "overwrite", None)
-    merge = _parse_merge(sql)
-    if merge is not None:
-        return _run_merge(spark, merge)
-    inserted = _run_insert(spark, sql)
-    if inserted is not None:
-        return inserted
+    lead = _LEAD_RE.match(sql)
+    if lead and lead.group(1).upper() in _DML_VERBS:
+        out = _run_dml(spark, sql, lead.group(1).upper())
+        if out is not None:
+            return out
     described = _run_describe(spark, sql)
     if described is not None:
         return described
     altered = _run_alter(spark, sql)
     if altered is not None:
         return altered
-    deleted = _run_delete(spark, sql)
-    if deleted is not None:
-        return deleted
-    updated = _run_update(spark, sql)
-    if updated is not None:
-        return updated
     maint = _run_maintenance(spark, sql)
     if maint is not None:
         return maint

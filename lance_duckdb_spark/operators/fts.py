@@ -677,12 +677,15 @@ def ensure_fts_index(
         F.count(F.lit(1)).alias("n"),
         F.sum("doc_id").alias("s"),
         F.max("doc_id").alias("m"),
+        # decimal: a bigint sum of hashes overflows under ANSI mode
+        F.sum(F.xxhash64("text").cast("decimal(38,0)")).alias("h"),
     ).collect()[0]
     want = {
         "corpus_path": os.path.abspath(sf_dir),
         "n_docs_total": int(prof["n"]),
         "sum_doc_id": None if prof["s"] is None else int(prof["s"]),
         "max_doc_id": None if prof["m"] is None else int(prof["m"]),
+        "sum_text_hash": None if prof["h"] is None else int(prof["h"]),
     }
     marker = os.path.join(index_dir, "_built_for.json")
     reuse = False
@@ -1002,7 +1005,8 @@ def _staged_fts_dataset(spark: SparkSession, sf_dir: str) -> str:
     current — the ensure_fts_index build-or-reuse policy applied to
     the dataset+index pair: the sidecar marker records the absolute
     corpus path plus a content fingerprint (row count, sum/max of
-    doc_id), and the index meta must parse and still pin the staged
+    doc_id, sum of the texts' xxhash64, so changed text under the same
+    ids rebuilds), and the index meta must parse and still pin the staged
     dataset's head version; any mismatch rebuilds both. Only
     (doc_id, text) are written — all the match_bm25 serving path
     reads."""
@@ -1018,12 +1022,15 @@ def _staged_fts_dataset(spark: SparkSession, sf_dir: str) -> str:
         F.count(F.lit(1)).alias("n"),
         F.sum("doc_id").alias("s"),
         F.max("doc_id").alias("m"),
+        # decimal: a bigint sum of hashes overflows under ANSI mode
+        F.sum(F.xxhash64("text").cast("decimal(38,0)")).alias("h"),
     ).collect()[0]
     want = {
         "corpus_path": os.path.abspath(sf_dir),
         "n_docs_total": int(prof["n"]),
         "sum_doc_id": None if prof["s"] is None else int(prof["s"]),
         "max_doc_id": None if prof["m"] is None else int(prof["m"]),
+        "sum_text_hash": None if prof["h"] is None else int(prof["h"]),
     }
     marker = os.path.join(root, FTS_DATASET_DIR, "_built_for.json")
     reuse = False

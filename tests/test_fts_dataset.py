@@ -199,6 +199,43 @@ def test_lance_sql_fts_refuses_quotes(spark, tmp_path, monkeypatch):
         fts.lance_sql_fts(spark, str(tmp_path / "sf_plain"))
 
 
+def test_staged_fts_dataset_rebuilds_on_changed_text(spark, sf_dir, tmp_path):
+    """The staged dataset behind lance_sql_fts is reused only while its
+    corpus is unchanged: a documents.parquet with the same doc_ids and
+    one changed text must rebuild it, not serve the stale text."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lance_duckdb_spark import tables
+    from lance_duckdb_spark.operators import fts
+
+    src = pq.read_table(f"{sf_dir}/documents.parquet")
+    corpus = tmp_path / f"fts_fingerprint_{uuid.uuid4().hex[:8]}"
+    corpus.mkdir()
+    pq.write_table(src, corpus / "documents.parquet")
+    root = fts._staged_fts_dataset(spark, str(corpus))
+    try:
+        texts = src.column("text").to_pylist()
+        texts[0] = f"fingerprint {texts[0]}"
+        col = src.schema.get_field_index("text")
+        pq.write_table(
+            src.set_column(col, "text", pa.array(texts)),
+            corpus / "documents.parquet",
+        )
+        tables._RELATION_CACHE.pop((str(corpus), "documents"), None)
+        assert fts._staged_fts_dataset(spark, str(corpus)) == root
+        first = src.column("doc_id")[0].as_py()
+        got = (
+            spark.read.format("lance").load(root)
+            .where(F.col("doc_id") == first).first()["text"]
+        )
+        assert got == texts[0]
+    finally:
+        shutil.rmtree(os.path.dirname(root), ignore_errors=True)
+
+
 def test_fts_dataset_delete_append_extend_loop(spark, docs_root):
     """The zero-rebuild curation loop for TEXT (r14 late): DELETE →
     APPEND → extend_fts_index_for_dataset → search. Pre-extend
