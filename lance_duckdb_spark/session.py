@@ -16,6 +16,20 @@ from collections.abc import Iterable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DataType, StructType
 
+# Spark keeps compiled generated classes (whole-stage code, projections,
+# predicates) in one LRU cache per JVM of spark.sql.codegen.cache.maxEntries
+# entries, 100 by default. A session that cycles through more distinct plan
+# shapes than that evicts each class before its next use, so every cycle
+# recompiles all of them: at 100 entries each steady perfbench pass
+# recompiled 144 classes on ann_serving and 129 on lance_dml (sf0.1).
+# tools/codegen_census.py measured the working set of the whole registry:
+# one pass of all 153 queries in one session at sf0.01 compiles
+# REGISTRY_CODEGEN_CLASSES distinct classes (per query median 12, p90 26,
+# max 89) and grows metaspace from 77 to 223 MB. 4096 entries hold the
+# registry with headroom; re-run the census when the registry grows.
+REGISTRY_CODEGEN_CLASSES = 2254
+CODEGEN_CACHE_MAX_ENTRIES = 4096
+
 
 def get_spark(app_name: str = "lance_duckdb_spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -37,6 +51,7 @@ def get_spark(app_name: str = "lance_duckdb_spark") -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         .getOrCreate()
     )
 

@@ -47,6 +47,8 @@ def test_dml_refused_on_native_dataset(spark):
     from lance_duckdb_spark.catalog import lance_sql
     from lance_duckdb_spark.sources.lance_format import LanceDatasetError
 
+    # on any other store these statements would really commit into REF
+    assert ln.is_native_dataset(REF)
     stmts = [
         f"DELETE FROM '{REF}' WHERE id = 1",
         f"UPDATE '{REF}' SET age = 0 WHERE id = 1",
@@ -183,6 +185,8 @@ def test_spark_native_version_option(spark):
 
 
 def test_spark_native_write_refused(spark):
+    # on any other store this append would really commit into REF
+    assert ln.is_native_dataset(REF)
     register(spark)
     df = spark.range(3)
     with pytest.raises(Exception, match="[Ll]ance proper|not supported"):
