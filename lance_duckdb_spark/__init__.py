@@ -16,4 +16,6 @@ SQL. This package re-expresses both Spark-first:
 - ``streaming/`` — Structured Streaming jobs (§2.D).
 """
 
+from . import pyworker  # noqa: F401  (first: patches zipimport in workers)
+
 __version__ = "0.1.0"

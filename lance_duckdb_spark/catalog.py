@@ -971,23 +971,13 @@ def _run_alter_add_backfill(
 
     Refusals: existing/tombstoned-legacy name, unparsable type,
     nondeterministic expressions (the rewrite would bake
-    unreproducible values — same _NONDET_RE as MERGE sources), and
+    unreproducible values — maintenance.refuse_nondeterministic), and
     a declared type that differs from the expression's ANALYZED
     type (no silent cast: write CAST(... AS <type>) in the
     expression to make the conversion explicit)."""
     from pyspark.sql.types import StructType
 
-    from .sources.maintenance import _NONDET_RE
-
     name = name.strip("`")
-    nondet = _NONDET_RE.search(expr)
-    if nondet:
-        raise lf.LanceDatasetError(
-            f"ADD COLUMN ... AS: expression contains nondeterministic "
-            f"function {nondet.group(0).rstrip('(').strip()!r}; a "
-            "backfill must be reproducible — precompute the value or "
-            "use a deterministic expression"
-        )
     try:
         declared_struct = StructType.fromDDL(f"`{name}` {type_src}")
     except Exception as e:
@@ -1033,6 +1023,12 @@ def _run_alter_add_backfill(
             f"ADD COLUMN ... AS: cannot evaluate {expr!r} over the "
             f"dataset columns: {str(e)[:300]}"
         )
+    maintenance.refuse_nondeterministic(
+        backfilled,
+        "ADD COLUMN ... AS expression",
+        "a backfill must be reproducible — precompute the value or "
+        "use a deterministic expression",
+    )
     if got_type.simpleString() != declared.dataType.simpleString():
         raise lf.LanceDatasetError(
             f"ADD COLUMN ... AS: declared type "
@@ -1493,23 +1489,16 @@ def _run_merge(spark: SparkSession, sql: str, plan) -> DataFrame:
         # subquery — rand()/current_timestamp/TABLESAMPLE — can
         # classify DIFFERENT rows per job, silently writing rows the
         # counts never saw (r11 advice). The native-view spill-skip
-        # below makes this reachable, so refuse here exactly like
-        # update_where_sql refuses nondeterministic predicates.
-        from .sources.maintenance import _NONDET_RE
-
-        nondet = _NONDET_RE.search(parsed["src_select"]) or re.search(
-            r"(?i)\bTABLESAMPLE\b", parsed["src_select"]
-        )
-        if nondet:
-            raise lf.LanceDatasetError(
-                f"MERGE USING subquery uses nondeterministic "
-                f"{nondet.group(0).strip('(').strip()!r}: the source "
-                "is evaluated by several separate jobs and must "
-                "produce the same rows each time — materialize it "
-                "first (COPY ... TO a staging dataset) and merge "
-                "from that"
-            )
+        # below makes this reachable, so refuse it.
         src = lance_sql(spark, parsed["src_select"])
+        maintenance.refuse_nondeterministic(
+            src,
+            "MERGE USING subquery",
+            "the source is evaluated by several separate jobs and must "
+            "produce the same rows each time — materialize it first "
+            "(COPY ... TO a staging dataset) and merge from that",
+            sample=True,
+        )
     key = parsed["key_t"]
     if parsed["key_s"] != key:
         if key in src.columns:

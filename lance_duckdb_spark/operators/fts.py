@@ -661,13 +661,14 @@ def ensure_fts_index(
     this block would drift, and the count-only marker could serve a
     stale index for a DIFFERENT corpus of equal row count living at
     a same-basename path). The sidecar marker records the ABSOLUTE
-    corpus path plus a cheap content fingerprint — row count and
-    sum/max of ``doc_id``, one aggregation job — and the index meta
-    must parse; any mismatch (moved corpus, different ids, corrupt
-    index) rebuilds from scratch. Reuse is the point: an
-    indexed-serving entry's comparable unit of work is the SEARCH,
-    not the one-time build (r9 bench: rebuilding inside every timed
-    run measured the load phase 77x over the oracle's raw scan)."""
+    corpus path plus a cheap content fingerprint — row count, sum/max
+    of ``doc_id`` and ``sum(xxhash64(text))``, one aggregation job —
+    and the index meta must parse; any mismatch (moved corpus,
+    different ids, changed text, corrupt index) rebuilds from
+    scratch. Reuse is the point: an indexed-serving entry's
+    comparable unit of work is the SEARCH, not the one-time build
+    (r9 bench: rebuilding inside every timed run measured the load
+    phase 77x over the oracle's raw scan)."""
     import json as _json
 
     from pyspark.sql import functions as F

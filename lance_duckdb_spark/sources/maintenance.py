@@ -17,7 +17,6 @@ never a mix).
 from __future__ import annotations
 
 import os
-import re
 import shutil
 
 from . import iolayer as iol
@@ -343,17 +342,46 @@ def _commit_deletion_hits(
     return sum(int(r["n_new"]) for r in meta)
 
 
-# Spark SQL functions whose value can differ between two evaluations
-# of the same predicate. update_where_sql evaluates its WHERE twice
-# (pass 1 finds hit fragments + counts, pass 2 rewrites), as two
-# SEPARATE queries — even query-stable functions like current_date
-# can change between them, updating a different row set than counted
-# and silently skipping rows in non-hit fragments (r9 advice). Refuse.
-_NONDET_RE = re.compile(
-    r"(?i)\b(rand|randn|uuid|shuffle)\s*\(|"
-    r"\b(current_timestamp|current_date|localtimestamp|now|"
-    r"unix_timestamp|monotonically_increasing_id)\b"
-)
+def refuse_nondeterministic(
+    df: DataFrame, what: str, why: str, *, sample: bool = False
+) -> None:
+    """Refuse ``df`` when two separate evaluations of its analyzed plan
+    may select different rows. The DML lowerings evaluate one condition
+    or source in SEPARATE queries (UPDATE: hit scan, then rewrite;
+    MERGE: profile, stats pass, rewrite), so the plan must be
+    ``deterministic()`` — Spark's analyzer decides that for every
+    spelling (random, uniform, spark_partition_id, ...) — and must not
+    read the clock: current_date, now and localtimestamp are fixed
+    within one query but can move between two. ``sample`` also refuses
+    TABLESAMPLE, which Spark counts as deterministic."""
+    plan = df._jdf.queryExecution().analyzed()
+    patterns = df.sparkSession._jvm.org.apache.spark.sql.catalyst.trees
+    if not plan.deterministic():
+        reason = "a nondeterministic function"
+    elif plan.containsPattern(patterns.TreePattern.CURRENT_LIKE()):
+        reason = "the current date or time"
+    elif sample and _has_sample(plan):
+        reason = "TABLESAMPLE"
+    else:
+        return
+    raise lf.LanceDatasetError(
+        f"{what} is nondeterministic (uses {reason}): {why}"
+    )
+
+
+def _has_sample(plan) -> bool:
+    """Whether a JVM logical plan or one of its subqueries holds a
+    ``Sample`` node."""
+    stack = [plan]
+    subs = plan.subqueriesAll()
+    stack += [subs.apply(i) for i in range(subs.size())]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Sample":
+            return True
+        kids = node.children()
+        stack += [kids.apply(i) for i in range(kids.size())]
+    return False
 
 
 def update_where_sql(
@@ -376,15 +404,6 @@ def update_where_sql(
     Returns the number of updated rows."""
     from pyspark.sql import functions as F
 
-    nondet = _NONDET_RE.search(predicate_sql)
-    if nondet:
-        raise lf.LanceDatasetError(
-            f"UPDATE WHERE uses nondeterministic function "
-            f"{nondet.group(0).strip('(').strip()!r}: the predicate is "
-            "evaluated twice (fragment scan, then rewrite) and must "
-            "select the same rows both times — precompute the value "
-            "and inline it as a literal"
-        )
     manifest = lf.read_manifest(root)
     # by-name fragment reads below (r13 guard: renamed
     # physical columns would silently null-fill)
@@ -417,10 +436,18 @@ def update_where_sql(
         )
 
     # pass 1: which fragments hold matches, and how many rows
+    matches = _with_dels(
+        _tagged(manifest.fragments), manifest.fragments
+    ).where(F.expr(predicate_sql))
+    refuse_nondeterministic(
+        matches,
+        "UPDATE WHERE",
+        "the predicate is evaluated twice (fragment scan, then "
+        "rewrite) and must select the same rows both times — "
+        "precompute the value and inline it as a literal",
+    )
     hits = (
-        _with_dels(_tagged(manifest.fragments), manifest.fragments)
-        .where(F.expr(predicate_sql))
-        .groupBy("__file")
+        matches.groupBy("__file")
         .count()
         .collect()
     )
@@ -745,6 +772,16 @@ def merge_apply(
 
     null_keyed_hit = False
     if candidates:
+        # the stats pass below and the rewrite evaluate the WHEN
+        # conditions in two separate queries
+        classified = _tagged(candidates)
+        refuse_nondeterministic(
+            classified,
+            "MERGE WHEN condition",
+            "the stats pass and the rewrite evaluate it separately "
+            "and must pick the same rows — precompute the value and "
+            "inline it as a literal",
+        )
         # one aggregation pass: per-action row counts + the key
         # bounds of rows that actually change (for write pruning).
         # NULL target keys need explicit tracking: a NULL-keyed
@@ -754,8 +791,7 @@ def merge_apply(
         # fragment whose only hits are NULL-keyed while still
         # counting its rows (r11 advice).
         stats = (
-            _tagged(candidates)
-            .where(F.col("__act").isNotNull())
+            classified.where(F.col("__act").isNotNull())
             .groupBy("__act")
             .agg(
                 F.count(F.lit(1)).alias("n"),

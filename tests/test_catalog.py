@@ -1264,6 +1264,43 @@ def test_update_refuses_nondeterministic_predicate(spark, sf_dir, tmp_path):
             )
 
 
+_MERGE_USING = "MERGE INTO '{t}' t USING (SELECT n_nationkey AS k FROM '{t}'"
+
+
+@pytest.mark.parametrize(
+    "stmt",
+    [
+        "UPDATE '{t}' SET n_regionkey = 0 WHERE random() < 0.5",
+        "UPDATE '{t}' SET n_regionkey = 0 WHERE uniform(0, 1) < 0.5",
+        "UPDATE '{t}' SET n_regionkey = 0 WHERE curdate() > DATE'2020-01-01'",
+        "UPDATE '{t}' SET n_regionkey = 0 WHERE spark_partition_id() = 0",
+        _MERGE_USING + ") s ON t.n_nationkey = s.k "
+        "WHEN MATCHED AND rand() < 0.5 THEN UPDATE SET n_regionkey = 0",
+        _MERGE_USING + ") s ON t.n_nationkey = s.k "
+        "WHEN MATCHED AND now() > TIMESTAMP'2020-01-01' "
+        "THEN UPDATE SET n_regionkey = 0",
+        _MERGE_USING + " WHERE spark_partition_id() = 0) s "
+        "ON t.n_nationkey = s.k WHEN MATCHED THEN DELETE",
+        _MERGE_USING + " WHERE uniform(0, 1) < 0.5) s "
+        "ON t.n_nationkey = s.k WHEN MATCHED THEN DELETE",
+        "ALTER TABLE '{t}' ADD COLUMN r double AS (random())",
+        "ALTER TABLE '{t}' ADD COLUMN d date AS (curdate())",
+    ],
+)
+def test_dml_refuses_nondeterministic_forms(spark, merge_tgt, stmt):
+    """Spark's analyzer, not a name list, decides what is
+    nondeterministic: aliases (random, uniform, curdate,
+    spark_partition_id), clock reads, and MERGE WHEN conditions that
+    the stats pass and the rewrite evaluate separately are refused
+    before any version commits."""
+    from lance_duckdb_spark.sources import lance_format as lf
+
+    before = lf.read_manifest(merge_tgt).version
+    with pytest.raises(lf.LanceDatasetError, match="nondeterministic"):
+        lance_sql(spark, stmt.format(t=merge_tgt))
+    assert lf.read_manifest(merge_tgt).version == before
+
+
 def test_sql_update_respects_deletion_vectors(spark, sf_dir, tmp_path):
     """A row hidden by a deletion vector must stay gone through an
     UPDATE whose predicate it matches — the rewrite materializes the

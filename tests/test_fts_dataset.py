@@ -236,6 +236,37 @@ def test_staged_fts_dataset_rebuilds_on_changed_text(spark, sf_dir, tmp_path):
         shutil.rmtree(os.path.dirname(root), ignore_errors=True)
 
 
+def test_ensure_fts_index_rebuilds_on_changed_text(spark, sf_dir, tmp_path):
+    """ensure_fts_index reuses a built index only while its corpus is
+    unchanged: the same doc_ids with one changed text must rebuild it,
+    so a search for the new word finds that document."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lance_duckdb_spark import tables
+    from lance_duckdb_spark.operators import fts
+
+    src = pq.read_table(f"{sf_dir}/documents.parquet")
+    corpus = tmp_path / f"fts_index_fingerprint_{uuid.uuid4().hex[:8]}"
+    corpus.mkdir()
+    index_dir = str(tmp_path / "fts_index")
+    pq.write_table(src, corpus / "documents.parquet")
+    fts.ensure_fts_index(spark, str(corpus), index_dir)
+    word = "zqxfingerprint"
+    assert search_bm25(spark, index_dir, [word]).count() == 0
+    texts = src.column("text").to_pylist()
+    texts[0] = f"{word} {texts[0]}"
+    col = src.schema.get_field_index("text")
+    pq.write_table(
+        src.set_column(col, "text", pa.array(texts)),
+        corpus / "documents.parquet",
+    )
+    tables._RELATION_CACHE.pop((str(corpus), "documents"), None)
+    fts.ensure_fts_index(spark, str(corpus), index_dir)
+    got = [r["doc_id"] for r in search_bm25(spark, index_dir, [word]).collect()]
+    assert got == [src.column("doc_id")[0].as_py()]
+
+
 def test_fts_dataset_delete_append_extend_loop(spark, docs_root):
     """The zero-rebuild curation loop for TEXT (r14 late): DELETE →
     APPEND → extend_fts_index_for_dataset → search. Pre-extend
