@@ -13,11 +13,13 @@ which needs no score normalization across heterogeneous scales
 (BM25 sums vs cosines) and is rank-only, hence integer-deterministic.
 
 Scale shape (100 TB posture):
-- each arm ends in ``orderBy(...).limit(RANK_CAP)`` — Spark's
-  TakeOrdered: per-partition partial top-k then a driver-side merge
-  of RANK_CAP-row heaps, NOT a global sort shuffle. The lexical arm
-  only ever aggregates postings for the query's terms; the vector
-  arm is one scan against a broadcast probe.
+- each arm ends in a per-partition partial top-k, NOT a global sort
+  shuffle: the lexical arm in ``orderBy(...).limit(RANK_CAP)``
+  (Spark's TakeOrdered, a driver-side merge of RANK_CAP-row heaps),
+  the vector arm in ``similarity.cosine_topk`` (per-batch top-k,
+  then a window over those few rows). The lexical arm only ever
+  aggregates postings for the query's terms; the vector arm is one
+  Arrow pass over the corpus against a driver-held probe.
 - ranking/fusion then run on two <=RANK_CAP-row frames — sub-task
   sized regardless of corpus scale.
 - the indexed variant reads the persisted term-bucket inverted
@@ -45,7 +47,7 @@ from pyspark.sql import functions as F
 
 from ..tables import load
 from . import fts
-from .similarity import _clamp1, _dot, norm
+from .similarity import cosine_topk
 
 RRF_K = 60
 RANK_CAP = 50  # per-arm candidate depth
@@ -73,17 +75,19 @@ def _lex_arm_direct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _vec_arm(
     spark: SparkSession, sf_dir: str, doc_filter: str | None = None
 ) -> DataFrame:
-    """Cosine top-RANK_CAP against the broadcast probe vector.
-    Norms are projected before the join (the ann_topk_bruteforce
-    codegen lesson) and the probe row is a broadcast 1-row dim.
+    """Cosine top-RANK_CAP against the probe vector, scored by
+    ``similarity.cosine_topk`` (the probe row itself excluded).
     ``doc_filter`` (r13): pre-filter — qualifying doc ids (doc_id
     == vec_id in this corpus) semi-join the candidates before the
     top-RANK_CAP cut."""
     emb = load(spark, sf_dir, "embeddings")
-    probe = emb.where(F.col("vec_id") == PROBE_VEC_ID).select(
-        F.col("embedding").alias("pe"), norm("embedding").alias("p_nrm")
-    )
-    cand = emb.where(F.col("vec_id") != PROBE_VEC_ID)
+    probes = [
+        (r["vec_id"], r["embedding"])
+        for r in emb.where(F.col("vec_id") == PROBE_VEC_ID)
+        .select("vec_id", "embedding")
+        .collect()
+    ]
+    cand = emb
     if doc_filter is not None:
         qual = (
             load(spark, sf_dir, "documents")
@@ -91,22 +95,8 @@ def _vec_arm(
             .select(F.col("doc_id").alias("vec_id"))
         )
         cand = cand.join(qual, "vec_id", "left_semi")
-    return (
-        cand
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            F.col("embedding").alias("ne"),
-            norm("embedding").alias("n_nrm"),
-        )
-        .crossJoin(F.broadcast(probe))
-        .select(
-            "doc_id",
-            _clamp1(
-                _dot("pe", "ne") / (F.col("p_nrm") * F.col("n_nrm"))
-            ).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(RANK_CAP)
+    return cosine_topk(cand, "vec_id", "embedding", probes, RANK_CAP).select(
+        F.col("neighbor_id").alias("doc_id"), F.col("cos_sim").alias("score")
     )
 
 

@@ -111,8 +111,8 @@ def ann_knn_join(
             f"{n_corpus}); use ann_knn_join_vectorized — bit-identical "
             "output, measured-linear constants"
         )
-    # norms projected ONCE before every join (the ann_topk_bruteforce
-    # codegen lesson, proven bit-identical to list_cosine_similarity):
+    # norms projected ONCE before every join (proven bit-identical
+    # to list_cosine_similarity):
     # inlining cosine() in the assignment stages would re-unroll both
     # 64-term norms per centroid pair — 3x the generated code and
     # ~4s of fresh-plan compile at r7 measurement

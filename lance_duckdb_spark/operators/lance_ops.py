@@ -1169,15 +1169,15 @@ def version_changes(
     surface as row-exact deletes. A REWRITE (UPDATE/upsert/compact)
     therefore surfaces as fragment-level delete+insert pairs — the
     standard file-CDF semantics. Scale shape: scans ONLY changed
-    fragments; mask diffs are the worker-side frames of
-    maintenance._deletion_masks_df; nothing row-sized touches the
+    fragments; mask diffs are the worker-side joins of
+    maintenance._join_masks; nothing row-sized touches the
     driver. Schema evolution: all scans read with v_to's committed
     schema (older files null-fill)."""
     from ..sources import lance_format as lf
     from ..sources.maintenance import (
         _anti_join_masks,
         _committed_schema,
-        _deletion_masks_df,
+        _join_masks,
     )
 
     man_a = lf.read_manifest(root, v_from)
@@ -1233,16 +1233,11 @@ def version_changes(
         and f.num_deleted > a_by_file[f.file].num_deleted
     ]
     if grown:
-        mb = _deletion_masks_df(spark, root, grown)
-        ma = _deletion_masks_df(
-            spark, root, [a_by_file[f.file] for f in grown]
-        )
-        new_mask = mb if ma is None else mb.join(
-            ma, on=["__file", "__pos"], how="left_anti"
-        )
+        masked_b = _join_masks(spark, root, _tagged(grown), grown, "left_semi")
         parts.append(
-            _tagged(grown)
-            .join(new_mask, on=["__file", "__pos"], how="left_semi")
+            _anti_join_masks(
+                spark, root, masked_b, [a_by_file[f.file] for f in grown]
+            )
             .select(*cols)
             .withColumn("_change_type", F.lit("delete"))
         )

@@ -2,15 +2,17 @@
 pairs, brute-force ANN top-k, and an IVF-bucketed ANN scale path.
 
 Numeric discipline: cosine is computed as a *sequential left fold*
-in doubles — ``F.aggregate`` over ``zip_with`` products — which is
+in doubles — the unrolled ``t0 + t1 + ...`` of ``_dot`` in SQL, the
+same fold over numpy columns in the Arrow kernels — which is
 bit-identical to DuckDB's ``list_cosine_similarity(CAST(x AS
 DOUBLE[]), ...)`` (verified: 14.5k pairs, 0 ulps apart). No rounding
 anywhere; thresholds compare identical doubles in both engines.
 
 Scale notes (100 TB / billions of vectors):
-- ``embedding_neardup`` and ``ann_topk_bruteforce`` broadcast the
-  smaller side (dedup probes / query set) and stream the big side —
-  no shuffle of the vector corpus; exact answers.
+- ``embedding_neardup`` broadcasts the corpus matrix and streams the
+  probes; the exact top-k queries (``cosine_topk``) stream the corpus
+  once through Arrow against a driver-held probe set — no shuffle of
+  the vector corpus; exact answers.
 - ``ann_ivf`` is the scale path: vectors are assigned to their
   nearest of K deterministic centroids (one broadcast join), probes
   search only the nearest N_PROBE buckets — candidate set is
@@ -65,7 +67,12 @@ def _dot_arrow(a: Column, b: Column) -> Column:
 
 
 def _dot(a: Column | str, b: Column | str, dim: int = DIM) -> Column:
-    """Dot product, dim-adaptive.
+    """Dot product of two vector columns of one row, dim-adaptive —
+    for the pair-join shapes that score every joined pair: near-dup
+    verification, IVF assignment, ``knn_join``, ``ann_ivf``'s
+    SQL-replicated search and the ``ann_search_pq`` rerank. A top-k of
+    a small probe set over a corpus goes through ``cosine_topk``
+    instead, which builds no pair rows.
 
     dim <= CODEGEN_DOT_MAX_DIM: unrolled into one whole-stage-codegen
     expression — Spark's higher-order functions (zip_with/aggregate)
@@ -117,6 +124,212 @@ def _clamp1(c: Column) -> Column:
 
 def cosine(a: Column | str, b: Column | str, dim: int = DIM) -> Column:
     return _clamp1(_dot(a, b, dim) / (norm(a, dim) * norm(b, dim)))
+
+
+# -- exact cosine top-k of a driver-held probe set ---------------------------
+
+# per-batch score matrix bound (probes x rows): larger probe sets are
+# scored in probe chunks, so a batch never holds more than this many
+# float64 scores at once
+_TOPK_CELLS = 1 << 22
+
+
+def _vector_block(col, dim: int, ansi: bool):
+    """(float64 matrix [dim, n], null mask [n]) of an Arrow list
+    column: row r's first ``dim`` elements, read through the list
+    offsets so a null element stays null (``flatten().reshape`` would
+    turn it into NaN, which the clamp maps to 1.0, not -1.0). A row is
+    null when the list is null or one of its first ``dim`` elements
+    is. A shorter non-null list raises under ANSI, as ``v[i]`` does;
+    without ANSI its missing terms are null, so its row is null."""
+    import numpy as np
+    import pyarrow as pa
+
+    n = len(col)
+    offsets = col.offsets.to_numpy()
+    lengths = offsets[1:] - offsets[:-1]
+    row_null = col.is_null().to_numpy(zero_copy_only=False)
+    short = ~row_null & (lengths < dim)
+    if ansi and short.any():
+        got = int(lengths[short].min())
+        raise IndexError(
+            f"[INVALID_ARRAY_INDEX] The index {got} is out of bounds. "
+            f"The array has {got} elements; cosine_topk reads the first "
+            f"{dim} (ANSI GetArrayItem semantics)"
+        )
+    take = ~row_null & ~short
+    values = col.values
+    flat = values.cast(pa.float64()).to_numpy(zero_copy_only=False)
+    elem_null = values.is_null().to_numpy(zero_copy_only=False)
+    idx = offsets[:-1][take][None, :] + np.arange(dim)[:, None]
+    mat = np.zeros((dim, n))
+    mat[:, take] = flat[idx]
+    null = ~take
+    null[take] |= elem_null[idx].any(axis=0)
+    return mat, null
+
+
+def _fold(a, b):
+    """Row-wise dot of two [dim, ...] arrays, summed left to right
+    from the first term, as the unrolled SQL ``t0 + t1 + ...`` is
+    (starting from 0.0 would turn a sum of ``-0.0`` terms into ``+0.0``)."""
+    acc = a[0] * b[0]
+    for i in range(1, a.shape[0]):
+        acc = acc + a[i] * b[i]
+    return acc
+
+
+def _topk_batch(batch, probes, k, exclude_self, bucket_col, ansi):
+    """Partial top-k of one Arrow batch: per probe, at most ``k``
+    candidates by (cos_sim desc, id asc nulls first) — the order of
+    the final window, so the batch's best k hold its share of the
+    global top k."""
+    import numpy as np
+    import pyarrow as pa
+
+    pids, P, p_null, p_nrm, p_buckets, dim = probes
+    n = batch.num_rows
+    if n == 0:
+        return None
+    id_arr = batch.column(0)
+    ids = id_arr.fill_null(0).cast(pa.int64()).to_numpy()
+    id_null = id_arr.is_null().to_numpy(zero_copy_only=False)
+    X, x_null = _vector_block(batch.column(1), dim, ansi)
+    x_nrm = np.sqrt(_fold(X, X))
+    if bucket_col is not None:
+        buckets = batch.column(2).to_numpy(zero_copy_only=False)
+    out_p, out_id, out_id_null, out_cos = [], [], [], []
+    step = max(1, _TOPK_CELLS // n)
+    for s in range(0, len(pids), step):
+        e = min(s + step, len(pids))
+        dot = _fold(P[:, s:e, None], X[:, None, :])
+        denom = p_nrm[s:e, None] * x_nrm[None, :]
+        null = p_null[s:e, None] | x_null[None, :]
+        cand = np.ones((e - s, n), dtype=bool)
+        if bucket_col is not None:
+            for j in range(s, e):
+                cand[j - s] = np.isin(buckets, p_buckets[j])
+        if exclude_self:  # neighbor_id != probe_id: a NULL id drops
+            cand &= ~id_null[None, :] & (ids[None, :] != pids[s:e, None])
+        zero = cand & ~null & (denom == 0)
+        if zero.any():
+            if ansi:
+                raise ZeroDivisionError(
+                    "[DIVIDE_BY_ZERO] Division by zero: a zero-norm "
+                    "vector has no cosine similarity"
+                )
+            null |= zero
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = dot / denom
+        # least(1, greatest(-1, c)): Spark orders NaN above every
+        # double, so NaN clamps to 1.0; greatest skips NULL, so a NULL
+        # quotient clamps to -1.0
+        cos = np.where(np.isnan(cos), 1.0, np.minimum(1.0, np.maximum(-1.0, cos)))
+        cos[null] = -1.0
+        for j in range(s, e):
+            sel = np.flatnonzero(cand[j - s])
+            c = cos[j - s, sel]
+            sel = sel[np.lexsort((ids[sel], ~id_null[sel], -c))[:k]]
+            out_p.append(np.full(len(sel), j))
+            out_id.append(ids[sel])
+            out_id_null.append(id_null[sel])
+            out_cos.append(cos[j - s, sel])
+    out_p = np.concatenate(out_p)
+    if not len(out_p):
+        return None
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(pids[out_p]),
+            pa.array(np.concatenate(out_id), mask=np.concatenate(out_id_null)),
+            pa.array(np.concatenate(out_cos)),
+        ],
+        names=["probe_id", "neighbor_id", "cos_sim"],
+    )
+
+
+def cosine_topk(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    probes,
+    k: int,
+    exclude_self: bool = True,
+    bucket_col: str | None = None,
+    probe_buckets=None,
+    dim: int = DIM,
+) -> DataFrame:
+    """Exact cosine top-``k`` of a small driver-held probe set over
+    ``corpus``: ``(probe_id, neighbor_id, cos_sim, rnk)`` with ranks
+    by cos_sim desc then neighbor_id asc, bit-identical to
+    ``row_number() OVER (PARTITION BY probe_id ORDER BY
+    _clamp1(_dot(pe, ne) / (p_nrm * n_nrm)) DESC, neighbor_id)`` over
+    the probe x corpus pairs.
+
+    ``probes``: ``(probe_id, vector)`` pairs. ``exclude_self`` drops
+    the candidate whose id equals the probe id (``neighbor_id !=
+    probe_id``). With ``bucket_col``, probe ``p`` only scores rows
+    whose bucket is in ``probe_buckets[p]`` — the IVF candidate set
+    without building posting x probe rows.
+
+    One ``mapInArrow`` pass scores each Arrow batch with numpy and
+    keeps its best ``k`` rows per probe; a ``row_number`` window over
+    those few rows gives the final ranks. Every dot and norm is the
+    same left-to-right float64 fold as the unrolled SQL, then the
+    same sqrt, quotient and clamp, so scores are the SQL's bits. Edge
+    cases follow the SQL too: a null vector or a null element among
+    the first ``dim`` makes the quotient NULL, which the clamp's
+    ``greatest(-1.0, NULL)`` turns into -1.0; a NaN quotient clamps to
+    1.0; a zero norm raises DIVIDE_BY_ZERO and a vector shorter than
+    ``dim`` raises INVALID_ARRAY_INDEX under ANSI (the session's
+    default; without ANSI both give a NULL quotient)."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import Window
+    from pyspark.sql.types import LongType
+
+    from ..session import local_frame
+
+    spark = corpus.sparkSession
+    ansi = spark.conf.get("spark.sql.ansi.enabled", "true").lower() == "true"
+    out_schema = "probe_id long, neighbor_id long, cos_sim double"
+    probes = list(probes)
+    if not probes:
+        return local_frame(spark, [], out_schema + ", rnk int")
+    pids = np.array([int(p) for p, _ in probes], dtype=np.int64)
+    p_buckets = None
+    if bucket_col is not None:
+        p_buckets = [
+            np.asarray(sorted(probe_buckets.get(p, ())), dtype=np.int64)
+            for p, _ in probes
+        ]
+    P, p_null = _vector_block(
+        pa.array([v for _, v in probes], type=pa.list_(pa.float64())), dim, ansi
+    )
+    p_nrm = np.sqrt(_fold(P, P))
+    packed = (pids, P, p_null, p_nrm, p_buckets, dim)
+
+    def topk(batches):
+        for batch in batches:
+            out = _topk_batch(
+                batch, packed, k, exclude_self, bucket_col, ansi
+            )
+            if out is not None:
+                yield out
+
+    cols = [id_col, vec_col] + ([bucket_col] if bucket_col else [])
+    partial = corpus.select(*cols).mapInArrow(topk, out_schema)
+    w = Window.partitionBy("probe_id").orderBy(
+        F.desc("cos_sim"), F.asc("neighbor_id")
+    )
+    id_type = corpus.schema[id_col].dataType
+    neighbor = F.col("neighbor_id")
+    if id_type != LongType():
+        neighbor = neighbor.cast(id_type)
+    return (
+        partial.withColumn("rnk", F.row_number().over(w))
+        .where(F.col("rnk") <= k)
+        .select("probe_id", neighbor.alias("neighbor_id"), "cos_sim", "rnk")
+    )
 
 
 NEARDUP_THRESHOLD = 0.4
@@ -292,42 +505,8 @@ TOP_K = 10
 
 
 def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    emb = load(spark, sf_dir, "embeddings")
-    # norms are projected BEFORE the join so the post-join stage
-    # compiles ONE unrolled 64-term dot product instead of three
-    # (cosine inlines dot + both norms): ~3x less generated code,
-    # ~1.3s less plan-compile per fresh run; arithmetic unchanged
-    # (dot/(norm_p*norm_n), same sequential fold, same clamp)
-    probes = emb.where(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("embedding").alias("pe"),
-        norm("embedding").alias("p_nrm"),
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ne"),
-        norm("embedding").alias("n_nrm"),
-    )
-    scored = corpus.join(
-        F.broadcast(probes), F.col("probe_id") != F.col("neighbor_id")
-    ).select(
-        "probe_id",
-        "neighbor_id",
-        _clamp1(
-            _dot("pe", "ne")
-            / (F.col("p_nrm") * F.col("n_nrm"))
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= TOP_K)
-        .select("probe_id", "neighbor_id", "cos_sim", "rnk")
-        .orderBy("probe_id", "rnk")
+    return _ann_topk_filtered_exact(spark, sf_dir, pred=None).orderBy(
+        "probe_id", "rnk"
     )
 
 
@@ -375,8 +554,8 @@ def _ivf_assignments(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     (stand-in for a k-means fit, which would be precomputed and
     broadcast in production). Returns (centroids, assignments).
 
-    Norms are projected BEFORE the fan-out join (the
-    ann_topk_bruteforce discipline): an inlined cosine() holds three
+    Norms are projected BEFORE the fan-out join: an inlined
+    cosine() holds three
     unrolled 64-term dots per projection — past janino's 64 KB
     method limit, forcing the whole assignment stage back to
     interpreted eval (r8 review; arithmetic unchanged:
@@ -870,44 +1049,23 @@ FILTERED_NPROBE = 12
 
 
 def _ann_topk_filtered_exact(
-    spark: SparkSession, sf_dir: str, pred: str = ANN_FILTER_PRED
+    spark: SparkSession, sf_dir: str, pred: str | None = ANN_FILTER_PRED
 ) -> DataFrame:
     """Exact filtered top-k: brute force over ONLY the qualifying
     corpus rows — the ground truth a pre-filter search must chase
     (and the SQL-replicable hashed sub-result of ann_ivf_filtered;
-    with ``pred`` a survivor predicate, of ann_ivf_after_delete).
-    Same plan discipline as ann_topk_bruteforce: norms projected
-    before the broadcast join, one unrolled codegen dot."""
-    from pyspark.sql import Window
-
+    with ``pred`` a survivor predicate, of ann_ivf_after_delete;
+    with ``pred=None``, ann_topk_bruteforce). The first N_PROBES
+    vectors are the probes, scored by ``cosine_topk``."""
     emb = load(spark, sf_dir, "embeddings")
-    probes = emb.where(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("embedding").alias("pe"),
-        norm("embedding").alias("p_nrm"),
-    )
-    corpus = emb.where(pred).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ne"),
-        norm("embedding").alias("n_nrm"),
-    )
-    scored = corpus.join(
-        F.broadcast(probes), F.col("probe_id") != F.col("neighbor_id")
-    ).select(
-        "probe_id",
-        "neighbor_id",
-        _clamp1(
-            _dot("pe", "ne") / (F.col("p_nrm") * F.col("n_nrm"))
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= TOP_K)
-        .select("probe_id", "neighbor_id", "cos_sim", "rnk")
-    )
+    probes = [
+        (r["vec_id"], r["embedding"])
+        for r in emb.where(F.col("vec_id") < N_PROBES)
+        .select("vec_id", "embedding")
+        .collect()
+    ]
+    corpus = emb if pred is None else emb.where(pred)
+    return cosine_topk(corpus, "vec_id", "embedding", probes, TOP_K)
 
 
 def _staged_ivf_dataset(

@@ -175,23 +175,26 @@ MASK_INLINE_MAX = 100_000
 
 
 def _deletion_masks_df(spark: SparkSession, root: str, fragments):
-    """Existing deletion masks of ``fragments`` as a ``(__file,
-    __pos)`` frame; returns None when no fragment carries a mask.
+    """Existing deletion masks of ``fragments``; returns None when no
+    fragment carries a mask. Two strategies, chosen by the TOTAL
+    deletion count the manifest already records (never by reading
+    mask files first):
 
-    Two strategies, chosen by the TOTAL deletion count the manifest
-    already records (never by reading mask files first):
-
-    - ``<= MASK_INLINE_MAX``: driver-read + broadcast — explicitly
-      BOUNDED (unlike the r10 implementation, which always built
-      this frame from a driver-side list of every position — an
-      unbounded O(total deletions) driver allocation; at 100 TB a
-      1%-deleted table is ~10^9 Row objects). At interactive scale
-      this saves two scan jobs per DML statement.
-    - above the cap: the ``_deletions/*.json`` side files are read
-      by Spark's JSON source inside tasks and exploded to positions
-      worker-side — positions never materialize on the driver; only
-      the deletion-file -> fragment-basename pairing (O(fragments
-      with deletions) metadata) is driver-built."""
+    - ``<= MASK_INLINE_MAX``: a ``(__file, __pos)`` frame, driver-read
+      and broadcast — explicitly BOUNDED (unlike the r10
+      implementation, which always built this frame from a
+      driver-side list of every position — an unbounded O(total
+      deletions) driver allocation; at 100 TB a 1%-deleted table is
+      ~10^9 Row objects). At interactive scale this saves two scan
+      jobs per DML statement.
+    - above the cap: a ``(__dfile, __pos)`` frame keyed by the
+      deletion file's basename — the ``_deletions/*.json`` side
+      files are read by Spark's JSON source inside tasks and
+      exploded to positions worker-side, so positions never
+      materialize on the driver. ``_join_masks`` maps the scan's
+      fragments to their deletion files instead of joining this
+      side, so it keeps its file-size estimate and Spark's own
+      ``autoBroadcastJoinThreshold`` decides whether it broadcasts."""
     from pyspark.sql import functions as F
 
     with_dels = [f for f in fragments if f.deletion_file]
@@ -209,15 +212,7 @@ def _deletion_masks_df(spark: SparkSession, root: str, fragments):
                 schema="__file string, __pos long",
             )
         )
-    pairs = local_frame(
-        spark,
-        [
-            (os.path.basename(f.deletion_file), os.path.basename(f.file))
-            for f in with_dels
-        ],
-        schema="__dfile string, __file string",
-    )
-    masks = (
+    return (
         spark.read.schema("positions array<long>")
         .json(
             [
@@ -225,22 +220,50 @@ def _deletion_masks_df(spark: SparkSession, root: str, fragments):
                 for f in with_dels
             ]
         )
-        .withColumn("__dfile", F.col("_metadata.file_name"))
-        .join(F.broadcast(pairs), "__dfile")
-        .select("__file", F.explode("positions").alias("__pos"))
+        .select(
+            F.col("_metadata.file_name").alias("__dfile"),
+            F.explode("positions").alias("__pos"),
+        )
     )
-    return masks
+
+
+def _join_masks(spark: SparkSession, root: str, df, fragments, how: str):
+    """Join a ``(__file, __pos)``-tagged scan of ``fragments`` with
+    their existing deletion masks: ``how="left_anti"`` drops masked
+    rows, ``"left_semi"`` keeps only them. Above the inline cap each
+    scanned row gets its fragment's deletion file from a broadcast
+    ``(__file, __dfile)`` frame of O(fragments) rows, and the join
+    runs on ``(__dfile, __pos)``. Joining that frame to the mask side
+    instead would make Catalyst (without CBO) size the mask side as
+    the product of its inputs, so it would not broadcast and the scan
+    would be shuffled into a sort-merge join."""
+    from pyspark.sql import functions as F
+
+    masks = _deletion_masks_df(spark, root, fragments)
+    if masks is None:
+        return df if how == "left_anti" else df.where(F.lit(False))
+    if "__dfile" not in masks.columns:
+        return df.join(masks, ["__file", "__pos"], how)
+    dfiles = local_frame(
+        spark,
+        [
+            (os.path.basename(f.file), os.path.basename(f.deletion_file))
+            for f in fragments
+            if f.deletion_file
+        ],
+        schema="__file string, __dfile string",
+    )
+    return (
+        df.join(F.broadcast(dfiles), "__file", "left")
+        .join(masks, ["__dfile", "__pos"], how)
+        .drop("__dfile")
+    )
 
 
 def _anti_join_masks(spark: SparkSession, root: str, df, fragments):
     """Drop already-deleted rows of a ``(__file, __pos)``-tagged
-    fragment scan by anti-joining the distributed mask frame. The
-    join strategy is left to Catalyst/AQE: small masks broadcast,
-    huge ones shuffle — never a forced driver-built broadcast."""
-    masks = _deletion_masks_df(spark, root, fragments)
-    if masks is None:
-        return df
-    return df.join(masks, on=["__file", "__pos"], how="left_anti")
+    fragment scan (see ``_join_masks``)."""
+    return _join_masks(spark, root, df, fragments, "left_anti")
 
 
 def _commit_deletion_hits(

@@ -833,11 +833,8 @@ def _masked_ids(
     if not masked:
         return None
     lf.require_physical_identity(man, "deletion-aware index serving")
-    from .maintenance import _deletion_masks_df
+    from .maintenance import _join_masks
 
-    masks = _deletion_masks_df(spark, root, masked)
-    if masks is None:
-        return None
     tagged = spark.read.parquet(
         *[
             iol.spark_read_path(os.path.join(root, f.file))
@@ -848,9 +845,8 @@ def _masked_ids(
         F.col("_metadata.file_name").alias("__file"),
         F.col("_metadata.row_index").alias("__pos"),
     )
-    return (
-        tagged.join(masks, ["__file", "__pos"], "left_semi")
-        .select(F.col(id_col).cast("long").alias(id_col))
+    return _join_masks(spark, root, tagged, masked, "left_semi").select(
+        F.col(id_col).cast("long").alias(id_col)
     )
 
 
@@ -867,12 +863,13 @@ def ann_search(
     """ANN top-k via the persisted index.
 
     ``probes``: DataFrame with (probe_id, <column>) — a small query
-    set (broadcast). Bucket choice per probe runs driver-side over
-    the collected probe vectors (the probe set is the only thing
-    ever collected, same discipline as ann_topk_bruteforce); the
-    postings scan is filtered by LITERAL bucket ids, so Spark's
-    partition pruning skips every other bucket directory before IO.
-    Exact cosine rerank inside the candidate buckets.
+    set, collected once (the probe set is the only thing ever
+    collected). Bucket choice per probe runs driver-side over the
+    collected probe vectors; the postings scan is filtered by
+    LITERAL bucket ids, so Spark's partition pruning skips every
+    other bucket directory before IO. The exact cosine rerank of
+    each probe's candidate buckets is ``similarity.cosine_topk``:
+    one Arrow pass over the pruned postings, no posting x probe rows.
 
     ``exclude_self`` (default True) drops candidates whose id equals
     the probe_id — correct ONLY when probes are drawn from the
@@ -896,7 +893,7 @@ def ann_search(
     still means "the indexed snapshot, deletes ignored"."""
     import numpy as np
 
-    from ..operators.similarity import _clamp1, _dot, norm
+    from ..operators.similarity import cosine_topk
 
     meta = read_index_meta(root)
     live_excl = _staleness_gate(spark, root, meta, allow_stale, "IVF")
@@ -924,8 +921,7 @@ def ann_search(
             f"probes contain duplicate probe_id values {dupes[:5]}; "
             "probe ids must be unique per search"
         )
-    pb_rows = []
-    all_buckets: set[int] = set()
+    probe_buckets: dict[int, list[int]] = {}
     chosen_cells: set[int] | None = None
     if two_level:
         # coarse routing on the driver (m = sqrt(k) seeds from the
@@ -972,26 +968,16 @@ def ann_search(
             ranked = sorted(
                 cand, key=lambda t: (-float(t[1] @ (x / xn)), t[0])
             )[:nprobe]
-            vec = [float(v) for v in r[column]]
-            for b, _ in ranked:
-                pb_rows.append((pid, int(b), vec))
-                all_buckets.add(int(b))
-                chosen_cells.add(bucket_cell[b])
+            probe_buckets[pid] = [int(b) for b, _ in ranked]
+            chosen_cells.update(bucket_cell[b] for b, _ in ranked)
     else:
         for r in probe_rows:
             x = np.asarray(r[column], dtype=np.float64)
             xn = np.sqrt((x * x).sum()) or 1.0
             sim = (C / c_nrm[:, None]) @ (x / xn)
             order = np.argsort(-sim, kind="stable")[:nprobe]
-            vec = [float(v) for v in r[column]]
-            for b in order:
-                pb_rows.append((int(r["probe_id"]), int(b), vec))
-                all_buckets.add(int(b))
-    probe_buckets = local_frame(
-        spark,
-        pb_rows,
-        schema="probe_id long, bucket_id long, __probe_vec array<double>",
-    )
+            probe_buckets[int(r["probe_id"])] = [int(b) for b in order]
+    all_buckets = {b for bs in probe_buckets.values() for b in bs}
 
     posting_dirs = [_postings_dir(root, meta)] + [
         os.path.join(root, INDEX_DIR, d) for d in meta.get("delta_dirs", [])
@@ -1009,42 +995,17 @@ def ann_search(
         # deletion-aware serving: drop head-deleted ids BEFORE the
         # top-k window — results are the exact best-k over survivors
         post = post.join(live_excl, id_col, "left_anti")
-    dim = meta["dim"]
-    # norms projected BELOW the probe fan-out join (r14, the
-    # ann_topk_bruteforce discipline): an inlined cosine() holds
-    # THREE unrolled dim-term dots in the post-join projection —
-    # ~3x the generated code (janino-ceiling risk) and the two norm
-    # fans re-run per (probe, posting) pair. Here each posting row's
-    # norm is computed once below the join, each probe-bucket row's
-    # once on the tiny broadcast side, and the joined stage compiles
-    # ONE dot. Arithmetic unchanged: clamp(dot/(p_nrm*n_nrm)), same
-    # fold order, same operand order as cosine().
-    post = post.withColumn("__n_nrm", norm(column, dim))
-    probe_buckets = probe_buckets.withColumn(
-        "__p_nrm", norm("__probe_vec", dim)
-    )
-    cands = post.join(F.broadcast(probe_buckets), "bucket_id")
-    if exclude_self:
-        cands = cands.where(F.col(id_col) != F.col("probe_id"))
-    from pyspark.sql import Window
-
-    scored = cands.select(
-        "probe_id",
-        F.col(id_col).alias("neighbor_id"),
-        _clamp1(
-            _dot("__probe_vec", column, dim)
-            / (F.col("__p_nrm") * F.col("__n_nrm"))
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k_neighbors)
-        .select("probe_id", "neighbor_id", "cos_sim", "rnk")
-        .orderBy("probe_id", "rnk")
-    )
+    return cosine_topk(
+        post,
+        id_col,
+        column,
+        [(int(r["probe_id"]), r[column]) for r in probe_rows],
+        k_neighbors,
+        exclude_self=exclude_self,
+        bucket_col="bucket_id",
+        probe_buckets=probe_buckets,
+        dim=meta["dim"],
+    ).orderBy("probe_id", "rnk")
 
 
 # ------------------------------------------------------------ IVF_PQ

@@ -1,5 +1,6 @@
-"""Generated-code census: how many Java classes Spark compiles for a set
-of registry statements run in one session.
+"""Generated-code census: how many Java classes Spark compiles, and how
+much Java source it generates, for a set of registry statements run in
+one session.
 
     python tools/codegen_census.py SF_DIR                      # every query
     python tools/codegen_census.py SF_DIR --workload ann_serving --passes 2
@@ -11,7 +12,17 @@ the classes compiled (``CodegenMetrics`` compilation count, the
 codegen cache's misses) and the generated methods whose bytecode is
 over HotSpot's 8000-byte huge-method limit, which HotSpot never
 JIT-compiles while ``-XX:+DontCompileHugeMethods`` (its default) holds.
-It then prints the distinct total, the per-statement median, p90 and
+
+It also prints the Java source that every executed
+``WholeStageCodegenExec`` generated (KB, without comments and the
+formatter's line numbers) and the time its ``doCodeGen`` took (Spark's own
+``WholeStageCodegenExec.codeGenTime`` counter). A cached class is not
+recompiled, but its source is regenerated on every execution to look
+it up, so a steady pass shows 0 classes and still pays this time.
+Capturing the source turns on that class's DEBUG log and its formatting
+adds to the statement's wall time, not to the ``doCodeGen`` time.
+
+After the passes it prints the distinct total, the per-statement median, p90 and
 maximum, and the metaspace the compiled classes took. While the total
 stays below ``spark.sql.codegen.cache.maxEntries`` nothing is evicted,
 so every compile is a distinct class, and a second pass shows what
@@ -25,6 +36,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import statistics
 import sys
 import time
@@ -35,7 +47,10 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 CODEGEN_LOGGER = "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator"
+WSCG_LOGGER = "org.apache.spark.sql.execution.WholeStageCodegenExec"
 HUGE_METHOD_MSG = "Generated method too long to be JIT compiled"
+SOURCE_START = "public Object generate(Object[] references)"
+COMMENT = re.compile(r"/\*.*?\*/|//[^\n]*", re.S)  # incl. the formatter's line numbers
 
 
 def parse_args(argv):
@@ -48,33 +63,54 @@ def parse_args(argv):
 
 
 class Census:
-    """Reads the JVM's codegen counters, its metaspace and the
-    CodeGenerator's huge-method log lines."""
+    """Reads the JVM's codegen counters, its metaspace, the
+    CodeGenerator's huge-method log lines and the source that
+    WholeStageCodegenExec logs."""
 
     def __init__(self, spark):
         jvm = spark._jvm
+        self._jvm = jvm
         self._metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+        self._wscg = jvm.org.apache.spark.sql.execution.WholeStageCodegenExec
         self._pools = [
             p for p in jvm.java.lang.management.ManagementFactory.getMemoryPoolMXBeans()
             if p.getName() == "Metaspace"
         ]
-        # the huge-method message is logged at INFO: route the logger
-        # alone into a buffer, and keep it off the console
+        levels = jvm.org.apache.logging.log4j.Level
+        # the huge-method message is logged at INFO, the generated
+        # source at DEBUG
+        self._buffer = self._capture(CODEGEN_LOGGER, levels.INFO)
+        self._source = self._capture(WSCG_LOGGER, levels.DEBUG)
+
+    def _capture(self, name: str, level):
+        """Route one logger alone into a buffer, off the console."""
+        jvm = self._jvm
         core = jvm.org.apache.logging.log4j.core
-        self._buffer = jvm.java.io.StringWriter()
+        buffer = jvm.java.io.StringWriter()
         layout = core.layout.PatternLayout.newBuilder().withPattern("%m%n").build()
         appender = (
             core.appender.WriterAppender.newBuilder()
-            .setName("codegen-census").setTarget(self._buffer).setLayout(layout).build()
+            .setName(f"codegen-census-{name}").setTarget(buffer).setLayout(layout).build()
         )
         appender.start()
-        logger = jvm.org.apache.logging.log4j.LogManager.getContext(False).getLogger(CODEGEN_LOGGER)
+        logger = jvm.org.apache.logging.log4j.LogManager.getContext(False).getLogger(name)
         logger.addAppender(appender)  # gives the logger a config of its own
         logger.setAdditive(False)
-        core.config.Configurator.setLevel(CODEGEN_LOGGER, jvm.org.apache.logging.log4j.Level.INFO)
+        core.config.Configurator.setLevel(name, level)
+        return buffer
 
     def compiles(self) -> int:
         return self._metrics.METRIC_COMPILATION_TIME().getCount()
+
+    def codegen_ms(self) -> float:
+        """Total ``doCodeGen`` time of the JVM so far."""
+        return self._wscg.codeGenTime() / 1e6
+
+    def take_sources(self) -> tuple[int, float]:
+        """(whole-stage sources generated, their KB) since the last call."""
+        text = self._source.toString()
+        self._source.getBuffer().setLength(0)
+        return text.count(SOURCE_START), len(COMMENT.sub("", text)) / 1024
 
     def metaspace_mb(self) -> float:
         return sum(p.getUsage().getUsed() for p in self._pools) / 2**20
@@ -119,6 +155,7 @@ def main(argv=None) -> int:
     census = Census(spark)
     capacity = int(spark.conf.get("spark.sql.codegen.cache.maxEntries"))
     census.take_huge_methods()
+    census.take_sources()
     meta_before = census.metaspace_mb()
     counts: list[int] = []  # classes per statement, first pass
     huge: list[str] = []  # huge methods, first pass
@@ -126,9 +163,9 @@ def main(argv=None) -> int:
     try:
         for p in range(1, args.passes + 1):
             print(f"pass {p}")
-            pass_start = census.compiles()
+            pass_start, pass_ms, pass_kb = census.compiles(), census.codegen_ms(), 0.0
             for name in names:
-                start, t0 = census.compiles(), time.perf_counter()
+                start, t0, ms0 = census.compiles(), time.perf_counter(), census.codegen_ms()
                 try:
                     run_statement(spark, QUERY_REGISTRY, name, args.sf_dir)
                     status = ""
@@ -138,15 +175,23 @@ def main(argv=None) -> int:
                     status = f"  ERROR {type(e).__name__}: {str(e).splitlines()[0][:120]}"
                 n = census.compiles() - start
                 methods = census.take_huge_methods()
+                stages, kb = census.take_sources()
+                pass_kb += kb
                 if p == 1:
                     counts.append(n)
                     huge += methods
                 print(
                     f"  {name:40s} classes {n:4d}  huge methods {len(methods):2d}"
+                    f"  source {kb:6.0f} KB in {stages:3d} stages"
+                    f"  doCodeGen {census.codegen_ms() - ms0:6.0f} ms"
                     f"  {time.perf_counter() - t0:6.2f}s{status}"
                 )
             purge_spill_root(spark)
-            print(f"  pass {p} compiled {census.compiles() - pass_start} classes")
+            print(
+                f"  pass {p} compiled {census.compiles() - pass_start} classes,"
+                f" generated {pass_kb:.0f} KB of source"
+                f" in {census.codegen_ms() - pass_ms:.0f} ms of doCodeGen"
+            )
         meta_after = census.metaspace_mb()
     finally:
         spark.stop()
