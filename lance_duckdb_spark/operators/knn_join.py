@@ -5,42 +5,41 @@ This is the batch-retrieval shape a training-data pipeline actually
 runs at 100 TB — "for each of these 10M new documents, find the 5
 nearest existing embeddings" — and it is structurally different
 from ``ann_ivf`` (similarity.py), whose query side is a constant
-handful of broadcast probes. Here the query side is a large
+handful of driver-held probes. Here the query side is a large
 relation (a fixed ~10% slice of the corpus in the driver query), so
 nothing about it may be broadcast or collected:
 
-- centroids (IVF_K rows) are the ONLY broadcast; both the query
-  side and the corpus side flow through them with one narrow
-  projection each (rank-to-bucket assignment — linear work).
-- the candidate join is an explicit SHUFFLE_HASH equi-join on
-  ``centroid_id``: both sides hash-partition on the bucket id and
-  meet co-located, corpus side builds, query side streams. No sort,
-  no broadcast of either big side, no driver materialization —
-  the plan that survives a 1000-executor scale-up. A plan test
-  (tests/test_knn_join.py) asserts the ShuffledHashJoin is really
-  in the physical plan and that no exchange hashes on anything
-  wider than the bucket id.
-- per-query candidates are corpus/IVF_K * KNN_NPROBE * KNN_ASSIGN —
+- centroids (k_centroids rows) are the only driver-held vectors;
+  ``nearest_centroids`` ranks every vector against them in one Arrow
+  pass (linear work), and that one ranking serves both roles: a
+  vector's KNN_ASSIGN nearest buckets as a corpus row and its
+  KNN_NPROBE nearest as a query row. Past TWO_LEVEL_MIN_K centroids
+  ``two_level_assign`` takes over, so the driver holds ~sqrt(k).
+- per-bucket scoring is one ``applyInPandas`` over role-tagged
+  bucket groups: one exchange hashed on ``centroid_id`` alone, then
+  each bucket's query x corpus cosine matrix (the ``_fold`` of
+  similarity.py) and each query's local top-k in the task, so only
+  k slim rows per (query, bucket) leave it.
+- per-query candidates are corpus/k * KNN_NPROBE * KNN_ASSIGN —
   bounded by the index geometry, not by corpus², so total work is
-  O(|Q| * corpus/IVF_K * nprobe * assign).
-- the final per-query top-k is a window over candidates already
-  co-partitioned by query (Spark re-shuffles on query_id only the
-  slim (query_id, neighbor_id, cos_sim) rows, never vectors).
+  O(|Q| * corpus/k * nprobe * assign).
+- the final per-query top-k is a window over those slim
+  (query_id, neighbor_id, cos_sim) rows, never vectors.
 
 Reference parity anchor: the reference exposes Lance's vector
 index family through its dataset surface (rust/lib.rs); a KNN join
 is that surface applied to a relation of probes instead of one
 literal probe vector.
 
-Determinism / oracle: every step — seed centroids (the IVF_K
-lowest vec_ids, standing in for a k-means fit exactly as ann_ivf
+Determinism / oracle: every step — seed centroids (the k lowest
+vec_ids, standing in for a k-means fit exactly as ann_ivf
 documents), nearest-bucket ranks with explicit tie-breaks
 (similarity desc, centroid_id asc), in-bucket exact cosine, final
 rank (cos_sim desc, neighbor_id asc) — is deterministic, so the
 DuckDB oracle replicates the ALGORITHM and the driver row is
-hash-exact, recall misses included. Cosine is the proven
-sequential-fold double (similarity.py header): bit-identical to
-DuckDB's ``list_cosine_similarity`` over ``DOUBLE[]``.
+hash-exact, recall misses included. The registry's ``ann_knn_join``
+and ``ann_knn_join_vectorized`` are both this operator, checked
+against the same ``ANN_KNN_JOIN_SQL``.
 """
 
 from __future__ import annotations
@@ -49,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..tables import load
-from .similarity import IVF_K, _clamp1, _dot, _dot_arrow, norm
+from .similarity import IVF_K
 
 KNN_JOIN_K = 5     # neighbors per query row
 KNN_NPROBE = 4     # buckets searched per query (ann_ivf's depth)
@@ -62,171 +61,6 @@ KNN_ASSIGN = 2     # corpus multi-assignment (the NDUP_ASSIGN remedy:
 #                    embedding corpora bucket far tighter)
 KNN_QUERY_MOD = 10  # query relation: vec_id % 10 == 7 (~10% slice)
 KNN_QUERY_REM = 7
-
-
-# The all-declarative KNN join is QUARANTINED as a small-scale
-# diagnostic: the r7 sf10 smoke measured its constants superlinear
-# one decade up even at scaled k (scalar n*k codegen assignment fan +
-# hot-bucket skew in the per-pair Arrow scoring stage — details in
-# the ann_knn_join docstring). It refuses corpora past this bound and
-# points at ann_knn_join_vectorized, the bit-identical
-# (test-asserted) measured-linear scale path.
-KNN_DECLARATIVE_MAX_CORPUS = 100_000
-
-
-def ann_knn_join(
-    spark: SparkSession, sf_dir: str, k_centroids: int = IVF_K
-) -> DataFrame:
-    """SMALL-SCALE DIAGNOSTIC / ORACLE-REFERENCE ONLY — not a 100 TB
-    path (see KNN_DECLARATIVE_MAX_CORPUS above;
-    ann_knn_join_vectorized is the bit-identical scale route).
-
-    ``k_centroids`` MUST scale with the corpus in production
-    (k ~ n/500, exactly like ivf_neardup_pairs): per-query candidate
-    work is corpus/k * nprobe * assign, so a FIXED k makes the join
-    quadratic in corpus size — the r7 scale smoke measured exactly
-    that (2e9 candidate dots at 10x with k=16). The driver query
-    keeps the IVF_K default because its oracle interpolates the
-    same constant.
-
-    Measured 10x limitation (r7 smoke, honestly recorded): even
-    with scaled k, this implementation's constants go superlinear
-    one decade up — the n*k centroid ranking is a SCALAR codegen
-    fan (n*k*64 flops with no row-vectorization) and the per-pair
-    Arrow scoring stage inherits hot-bucket skew (one straggler
-    task owned the worst bucket). The demonstrated-linear remedy is
-    the C42 ivf_neardup_pairs machinery: dimension-fold VECTORIZED
-    assignment (bit-exact, numpy rank-1 accumulation) and
-    per-bucket matrix scoring via applyInPandas, plus bucket
-    salting for the skewed few. This operator keeps the simpler
-    all-declarative form as the oracle-replicable reference
-    implementation; route >10x corpora through the C42-style path."""
-    emb = load(spark, sf_dir, "embeddings")
-    n_corpus = emb.count()
-    if n_corpus > KNN_DECLARATIVE_MAX_CORPUS:
-        raise ValueError(
-            f"ann_knn_join is the small-scale declarative reference "
-            f"form (measured superlinear one decade up) and refuses "
-            f"corpora past {KNN_DECLARATIVE_MAX_CORPUS} vectors (got "
-            f"{n_corpus}); use ann_knn_join_vectorized — bit-identical "
-            "output, measured-linear constants"
-        )
-    # norms projected ONCE before every join (proven bit-identical
-    # to list_cosine_similarity):
-    # inlining cosine() in the assignment stages would re-unroll both
-    # 64-term norms per centroid pair — 3x the generated code and
-    # ~4s of fresh-plan compile at r7 measurement
-    emb_n = emb.select(
-        "vec_id", "embedding", norm("embedding").alias("nrm")
-    )
-    # seed centroids are the k LOWEST vec_ids — the same lowest-k
-    # selection ann_knn_join_vectorized and ivf_neardup_pairs use
-    # (orderBy + limit, a TakeOrderedAndProject over the id column,
-    # never a full sort). A `vec_id < k` predicate coincides only on
-    # dense 0-based ids; after deletes the two variants would pick
-    # different centroid sets and silently break the documented
-    # bit-identity contract (r7 ADVICE).
-    centroids = (
-        emb_n.orderBy("vec_id")
-        .limit(k_centroids)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("embedding").alias("ce"),
-            F.col("nrm").alias("c_nrm"),
-        )
-    )
-
-    # ONE centroid ranking serves both sides: a vector's bucket
-    # assignment (corpus role) and its probe order (query role) are
-    # the SAME ranking — same vectors, same centroids, same
-    # tie-breaks — so the broadcast fan + per-vector rank window is
-    # built once and the two roles are post-window filters. The
-    # window's shuffle is byte-identical in both branches, so Spark's
-    # ReuseExchange executes it once (one 64-term dot stage compiled
-    # and run instead of two; fresh-plan 6.4s -> ~4s at r7).
-    ranked = (
-        emb_n.crossJoin(F.broadcast(centroids))
-        .select(
-            "vec_id",
-            "embedding",
-            "nrm",
-            "centroid_id",
-            _clamp1(
-                _dot("embedding", "ce") / (F.col("nrm") * F.col("c_nrm"))
-            ).alias("c_sim"),
-        )
-        .withColumn(
-            "crnk",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(
-                    F.desc("c_sim"), F.asc("centroid_id")
-                )
-            ),
-        )
-        .where(F.col("crnk") <= max(KNN_ASSIGN, KNN_NPROBE))
-    )
-
-    # corpus role: the KNN_ASSIGN nearest buckets per vector — each
-    # corpus row appears in KNN_ASSIGN postings, the boundary remedy
-    # embedding_neardup_ivf already uses
-    corpus_ranked = ranked.where(F.col("crnk") <= KNN_ASSIGN).select(
-        F.col("vec_id").alias("neighbor_id"),
-        "centroid_id",
-        F.col("embedding").alias("ne"),
-        F.col("nrm").alias("n_nrm"),
-    )
-
-    # query role: the KNN_NPROBE nearest buckets for the query slice
-    # — the query relation is LARGE (corpus-fraction sized); it is
-    # never broadcast, collected, or sorted globally
-    query_buckets = ranked.where(
-        (F.col("vec_id") % KNN_QUERY_MOD == KNN_QUERY_REM)
-        & (F.col("crnk") <= KNN_NPROBE)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("q_nrm"),
-        "centroid_id",
-    )
-
-    # the KNN join proper: co-partitioned shuffle-hash equi-join on
-    # the bucket id (hint pins the join strategy so AQE can't flip
-    # the corpus side into a broadcast at toy scale — the plan under
-    # test must be the one that runs at 100 TB). Norms were projected
-    # before the join so this stage compiles ONE unrolled dot.
-    cand = query_buckets.join(
-        corpus_ranked.hint("shuffle_hash"), "centroid_id"
-    ).where(F.col("neighbor_id") != F.col("query_id"))
-    # a pair meeting in up to min(ASSIGN, NPROBE) shared buckets is
-    # deduped AFTER scoring on the slim (ids, score) rows — the dot
-    # is recomputed for the rare duplicate rather than shuffling
-    # vectors through a distinct; cos_sim is deterministic per pair,
-    # so which duplicate survives is irrelevant.
-    # The candidate dot is the ARROW fold, not the unrolled codegen
-    # expression: fused into the shuffle-hash-join stage the 64-term
-    # method blows past the JIT's huge-method limit and runs
-    # interpreted (~15us/row measured vs ~1.5us scan-side, where the
-    # unrolled form stays JIT'd and is kept) — the Arrow fold is
-    # row-vectorized regardless of stage shape and bit-identical
-    # (same dimension-by-dimension float64 accumulation; verified
-    # pairwise at sf0.1). Net: 6.3s -> 3.6s fresh at sf0.1.
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        _clamp1(
-            _dot_arrow(F.col("qe"), F.col("ne"))
-            / (F.col("q_nrm") * F.col("n_nrm"))
-        ).alias("cos_sim"),
-    ).dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= KNN_JOIN_K)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-        .orderBy("query_id", "rnk")
-    )
 
 
 ANN_KNN_JOIN_SQL = f"""
@@ -283,28 +117,16 @@ def ann_knn_join_vectorized(
     probes: int | None = None,
     corpus_filter: str | None = None,
 ) -> DataFrame:
-    """The >10x SCALE PATH for the batch KNN join — same algorithm,
-    same answer (BIT-IDENTICAL to ``ann_knn_join``, so it shares its
-    oracle), executed with the C42 ivf_neardup machinery instead of
-    the all-declarative form whose constants the r7 smoke measured
-    superlinear one decade up:
+    """The batch KNN join (see the module docstring); the registry
+    runs it as both ``ann_knn_join`` and ``ann_knn_join_vectorized``.
 
-    - centroid ASSIGNMENT is one Arrow pass with DIMENSION-
-      SEQUENTIAL numpy accumulation (every vector-centroid cosine is
-      the exact scalar fold, vectorized across rows AND centroids as
-      64 rank-1 updates) — the n*k work keeps its flops but stops
-      being a scalar codegen fan;
-    - per-bucket SCORING is one ``applyInPandas`` over role-tagged
-      bucket groups: the bucket's query x corpus cosine matrix in
-      the same fold order, self-pairs dropped worker-side — no
-      per-pair Arrow vector shipping, no hot-bucket interpreted
-      loop (the straggler the smoke caught);
-    - everything after (pair dedupe across shared buckets, the
-      per-query top-k window, presentation sort) is the same slim
-      JVM plan as the reference form.
-
-    k_centroids must still scale with the corpus (k ~ n/500) — the
-    smoke runs this variant at that setting.
+    k_centroids must scale with the corpus in production (k ~ n/500,
+    exactly like ivf_neardup_pairs): per-query candidate work is
+    corpus/k * nprobe * assign, so a FIXED k makes the join quadratic
+    in corpus size — the r7 scale smoke measured exactly that (2e9
+    candidate dots at 10x with k=16). The driver query keeps the
+    IVF_K default because its oracle interpolates the same constant;
+    the smoke runs this operator at the scaled k.
 
     ``corpus_filter`` (r13): a Spark-SQL row predicate over the
     embeddings table with PRE-filter semantics on the CORPUS side —
@@ -318,15 +140,11 @@ def ann_knn_join_vectorized(
     equivalent — the oracle filters the assign CTE."""
     import math
 
-    import numpy as np
-    import pandas as pd
-
     from ..materialize import spill_to_parquet
     from .similarity import (
         TWO_LEVEL_MIN_K,
         TWO_LEVEL_PROBES,
-        _require_nonzero_norms,
-        _seq_norms,
+        nearest_centroids,
         two_level_assign,
     )
 
@@ -339,82 +157,35 @@ def ann_knn_join_vectorized(
         # two_level_assign, driver holds ~sqrt(k) coarse seeds only
         coarse_m = max(1, math.isqrt(k_centroids))
     if coarse_m:
-        assigned = spill_to_parquet(
-            two_level_assign(
-                spark,
-                emb.select("vec_id", "embedding"),
-                k_centroids,
-                n_keep,
-                coarse_m,
-                probes or max(TWO_LEVEL_PROBES, KNN_NPROBE),
-            ),
-            label="knn_assign2",
+        assigned = two_level_assign(
+            spark,
+            emb.select("vec_id", "embedding"),
+            k_centroids,
+            n_keep,
+            coarse_m,
+            probes or max(TWO_LEVEL_PROBES, KNN_NPROBE),
         )
-        return _knn_from_assigned(
-            spark, emb, assigned, corpus_filter=corpus_filter
-        )
-    cent_rows = (
-        emb.select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .limit(k_centroids)
-        .collect()
-    )
-    C = np.array(
-        [r["embedding"] for r in cent_rows], dtype=np.float32
-    ).astype(np.float64)
-    c_ids = np.array([r["vec_id"] for r in cent_rows], dtype=np.int64)
-    c_nrm = _seq_norms(C)
-    bc = spark.sparkContext.broadcast((c_ids, C, c_nrm))
-
-    def assign(batches):
-        ids_c, Cm, nrm_c = bc.value
-        # fewer centroids than ranks wanted (tiny corpus or small
-        # k_centroids): keep every available rank — the declarative
-        # twin ranks all centroids and filters, same result (r8
-        # review: the fixed n_keep slice crashed on k < 4 with
-        # mismatched column lengths)
-        keep = min(n_keep, len(Cm))
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(list(pdf["embedding"]), dtype=np.float32).astype(
-                np.float64
-            )
-            nx = _seq_norms(X)
-            _require_nonzero_norms(nx)
-            acc = np.zeros((len(X), len(Cm)))
-            for d in range(Cm.shape[1]):
-                acc += X[:, d, None] * Cm[None, :, d]
-            cos = np.clip(acc / (nx[:, None] * nrm_c[None, :]), -1.0, 1.0)
-            order = np.lexsort(
-                (np.broadcast_to(ids_c, cos.shape), -cos), axis=1
-            )
-            top = order[:, :keep]
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), keep),
-                    "centroid_id": ids_c[top].reshape(-1),
-                    "crnk": np.tile(
-                        np.arange(1, keep + 1), len(X)
-                    ),
-                }
-            )
-
-    # the n*k assignment pass is THE cost this variant exists to
-    # bound — spill it once so the two role filters below read the
-    # parquet stage instead of each re-running the Arrow scoring of
-    # the whole corpus (r8 review: the union's branches are distinct
-    # subtrees, ReuseExchange cannot deduplicate them). The spill
-    # backs the returned frame and is swept by the session's spill
-    # lifecycle (materialize.py).
-    assigned = spill_to_parquet(
-        emb.select("vec_id", "embedding").mapInPandas(
-            assign, schema="vec_id long, centroid_id long, crnk int"
-        ),
-        label="knn_assign",
-    )
+    else:
+        cents = [
+            (r["vec_id"], r["embedding"])
+            for r in emb.select("vec_id", "embedding")
+            .orderBy("vec_id")
+            .limit(k_centroids)
+            .collect()
+        ]
+        assigned = nearest_centroids(emb, "vec_id", "embedding", cents, n_keep)
+    # the n*k assignment pass is THE cost this operator bounds — spill
+    # it once so the two role filters in _knn_from_assigned read the
+    # parquet stage instead of each re-running the assignment of the
+    # whole corpus (the union's branches are distinct subtrees, so
+    # ReuseExchange cannot deduplicate them). The spill backs the
+    # returned frame and is swept by the session's spill lifecycle
+    # (materialize.py).
     return _knn_from_assigned(
-        spark, emb, assigned, corpus_filter=corpus_filter
+        spark,
+        emb,
+        spill_to_parquet(assigned, label="knn_assign"),
+        corpus_filter=corpus_filter,
     )
 
 
@@ -432,7 +203,7 @@ def _knn_from_assigned(
     import numpy as np
     import pandas as pd
 
-    from .similarity import _require_nonzero_norms, _seq_norms
+    from .similarity import _cos_matrix, _fold, _require_nonzero_norms
 
     corpus_role = assigned.where(F.col("crnk") <= KNN_ASSIGN).select(
         "vec_id", "centroid_id", F.lit(0).alias("role")
@@ -464,15 +235,11 @@ def _knn_from_assigned(
         X = np.array(list(pdf["embedding"]), dtype=np.float32).astype(
             np.float64
         )
-        nrm = _seq_norms(X)
+        nrm = np.sqrt(_fold(X.T, X.T))
         _require_nonzero_norms(nrm)
         ids = pdf["vec_id"].to_numpy()
-        Q, Nq, qid = X[is_q], nrm[is_q], ids[is_q]
-        Cb, Nc, nid = X[~is_q], nrm[~is_q], ids[~is_q]
-        acc = np.zeros((len(Q), len(Cb)))
-        for d in range(X.shape[1]):
-            acc += Q[:, d, None] * Cb[None, :, d]
-        cos = np.clip(acc / (Nq[:, None] * Nc[None, :]), -1.0, 1.0)
+        qid, nid = ids[is_q], ids[~is_q]
+        cos = _cos_matrix(X[is_q], nrm[is_q], X[~is_q], nrm[~is_q])
         # LOCAL top-K per query (r10 — the tier-4 disk fix): emitting
         # every bucket pair shipped ~bucket_size rows per (query,
         # probe) — a CONSTANT ~400x corpus blowup at the k~n/500
@@ -485,17 +252,13 @@ def _knn_from_assigned(
         # carry equal cos — leaves the post-dedupe global window's
         # answer BIT-IDENTICAL while shuffling K rows per (query,
         # probe) instead of ~1000.
-        # zero-norm guard (r10 advice): without it the NaN cosines a
-        # zero vector produces would sort differently here than
-        # Spark's NaN-greatest desc ordering in the declarative twin
-        # — both forms refuse instead (see _require_nonzero_norms)
         self_mask = qid[:, None] == nid[None, :]
         cos_m = np.where(self_mask, -np.inf, cos)
         kk = min(KNN_JOIN_K, len(nid))
         order = np.lexsort(
             (np.broadcast_to(nid, cos_m.shape), -cos_m), axis=1
         )[:, :kk]
-        rows = np.repeat(np.arange(len(Q)), kk)
+        rows = np.repeat(np.arange(len(qid)), kk)
         cols = order.reshape(-1)
         sel = cos_m[rows, cols]
         keep = np.isfinite(sel)  # drop the masked self-pairs
@@ -590,13 +353,12 @@ ORDER BY query_id, rnk
 
 
 QUERIES = {
-    "ann_knn_join": ann_knn_join,
+    "ann_knn_join": ann_knn_join_vectorized,
     "ann_knn_join_vectorized": ann_knn_join_vectorized,
     "ann_knn_join_filtered": ann_knn_join_filtered,
 }
 ORACLE = {
     "ann_knn_join": ANN_KNN_JOIN_SQL,
-    # same algorithm, bit-identical output — shares the oracle
     "ann_knn_join_vectorized": ANN_KNN_JOIN_SQL,
     "ann_knn_join_filtered": ANN_KNN_JOIN_FILTERED_SQL,
 }

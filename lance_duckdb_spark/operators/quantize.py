@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 from ..session import local_frame
 from ..tables import load
-from .similarity import ANN_TOPK_SQL, N_PROBES, TOP_K
+from .similarity import ANN_TOPK_SQL, N_PROBES, TOP_K, _clamp, _fold, pair_cosine
 
 SQ8_MAX_CODE = 127.0
 
@@ -101,12 +101,7 @@ def ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     p_ids = np.array([r["vec_id"] for r in probe_rows], dtype=np.int64)
     Pc, p_scales = _quantize(P)
     P_hat = Pc.astype(np.float64) / p_scales[:, None]  # dequantized probes
-    # exact probe norms: the SEQUENTIAL fold, dimension by dimension,
-    # matching list_cosine_similarity's accumulation order
-    p_nrm = np.zeros(len(P))
-    for d in range(P.shape[1]):
-        p_nrm += P[:, d] * P[:, d]
-    p_nrm = np.sqrt(p_nrm)
+    p_nrm = np.sqrt(_fold(P.T, P.T))  # exact probe norms
     p_l1_hat = np.abs(P_hat).sum(axis=1)
     bc = spark.sparkContext.broadcast(
         (p_ids, P, Pc, p_scales, p_nrm, p_l1_hat)
@@ -123,11 +118,7 @@ def ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             y_ids = pdf["vec_id"].to_numpy()
             Yc, s_y = _quantize(Y)
-            # exact corpus norms, sequential fold order
-            y_nrm = np.zeros(len(Y))
-            for d in range(Y.shape[1]):
-                y_nrm += Y[:, d] * Y[:, d]
-            y_nrm = np.sqrt(y_nrm)
+            y_nrm = np.sqrt(_fold(Y.T, Y.T))  # exact corpus norms
             y_l1 = np.abs(Y).sum(axis=1)
             # the compressed-domain GEMM: exact integer dot of codes
             # (float32 BLAS while 127^2*dim < 2^24, float64 above —
@@ -158,10 +149,9 @@ def ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 thresh = np.partition(lb[:, j], len(lb) - kk)[len(lb) - kk]
                 cand = np.nonzero(ub[:, j] >= thresh)[0]
                 # exact rescore of the provable superset only
-                acc = np.zeros(len(cand))
-                for d in range(Pm.shape[1]):
-                    acc += Y[cand, d] * Pm[j, d]
-                cos = np.clip(acc / (y_nrm[cand] * nrm_p[j]), -1.0, 1.0)
+                cos = _clamp(
+                    _fold(Y[cand].T, Pm[j]) / (y_nrm[cand] * nrm_p[j])
+                )
                 order = np.lexsort((y_ids[cand], -cos))[:kk]
                 sel = cand[order]
                 out["probe_id"].extend([ids_p[j]] * len(sel))
@@ -210,15 +200,12 @@ def _encoded(emb: DataFrame) -> DataFrame:
                 np.float64
             )
             codes, scales = _quantize(X)
-            nrm = np.zeros(len(X))
-            for d in range(X.shape[1]):
-                nrm += X[:, d] * X[:, d]
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
                     "codes": list(codes.astype(np.int8)),
                     "scale": scales,
-                    "nrm": np.sqrt(nrm),
+                    "nrm": np.sqrt(_fold(X.T, X.T)),
                     "l1": np.abs(X).sum(axis=1),
                 }
             )
@@ -345,7 +332,6 @@ def sq8_store_search(
     import pandas as pd
 
     from .common import spread
-    from .similarity import _dot_arrow, _clamp1, norm as _norm
 
     probe_rows = (
         emb.where(F.col("vec_id") < N_PROBES)
@@ -364,10 +350,7 @@ def sq8_store_search(
     p_ids = np.array([r["vec_id"] for r in probe_rows], dtype=np.int64)
     Pc, p_scales = _quantize(P)
     P_hat = Pc.astype(np.float64) / p_scales[:, None]
-    p_nrm = np.zeros(len(P))
-    for d in range(P.shape[1]):
-        p_nrm += P[:, d] * P[:, d]
-    p_nrm = np.sqrt(p_nrm)
+    p_nrm = np.sqrt(_fold(P.T, P.T))
     p_l1_hat = np.abs(P_hat).sum(axis=1)
     bc = spark.sparkContext.broadcast((p_ids, Pc, p_scales, p_nrm, p_l1_hat))
 
@@ -440,31 +423,16 @@ def sq8_store_search(
     # force-broadcast (r8 review): AQE broadcasts it when it is small
     # and falls back to a shuffle join when it is not; correctness is
     # unaffected either way. Probes stay a broadcast 10-row dim.
-    probes_df = (
-        emb.where(F.col("vec_id") < N_PROBES)
-        .select(
-            F.col("vec_id").alias("probe_id"),
-            F.col("embedding").alias("pe"),
-            _norm("embedding").alias("p_nrm"),
-        )
+    probes_df = emb.where(F.col("vec_id") < N_PROBES).select(
+        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("pe")
     )
-    emb_n = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ne"),
-        _norm("embedding").alias("n_nrm"),
-    )
-    scored = (
-        emb_n.join(candidates, "neighbor_id")
-        .join(F.broadcast(probes_df), "probe_id")
-        .select(
-            "probe_id",
-            "neighbor_id",
-            _clamp1(
-                _dot_arrow(F.col("pe"), F.col("ne"))
-                / (F.col("p_nrm") * F.col("n_nrm"))
-            ).alias("cos_sim"),
-        )
-    )
+    scored = pair_cosine(
+        emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne"))
+        .join(candidates, "neighbor_id")
+        .join(F.broadcast(probes_df), "probe_id"),
+        "pe",
+        "ne",
+    ).select("probe_id", "neighbor_id", "cos_sim")
     w = Window.partitionBy("probe_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id")
     )

@@ -1,12 +1,18 @@
 """Embedding similarity operators (SURVEY.md §2.C5-C7): near-duplicate
 pairs, brute-force ANN top-k, and an IVF-bucketed ANN scale path.
 
-Numeric discipline: cosine is computed as a *sequential left fold*
-in doubles — the unrolled ``t0 + t1 + ...`` of ``_dot`` in SQL, the
-same fold over numpy columns in the Arrow kernels — which is
-bit-identical to DuckDB's ``list_cosine_similarity(CAST(x AS
-DOUBLE[]), ...)`` (verified: 14.5k pairs, 0 ulps apart). No rounding
-anywhere; thresholds compare identical doubles in both engines.
+Numeric discipline: every exact cosine is ``_fold`` — the dot product
+summed left to right in float64 — over the norms folded the same
+way, then clamped to [-1, 1]. That is bit-identical to DuckDB's
+``list_cosine_similarity(CAST(x AS DOUBLE[]), ...)`` (verified: 14.5k
+pairs, 0 ulps apart), so thresholds and ranks compare identical
+doubles in both engines. Three Arrow kernels carry it:
+``cosine_topk`` (a probe set's top-k over a corpus),
+``nearest_centroids`` (each row's nearest centroids) and
+``pair_cosine`` (the cosine of two columns of a row). The bucket
+tasks (``_bucket_pairs``, ``two_level_assign``) run the same fold in
+numpy. A BLAS matmul never produces a returned score: it only builds
+approximate indexes and prefilters pairs at a proven-lossless margin.
 
 Scale notes (100 TB / billions of vectors):
 - ``embedding_neardup`` broadcasts the corpus matrix and streams the
@@ -14,15 +20,15 @@ Scale notes (100 TB / billions of vectors):
   once through Arrow against a driver-held probe set — no shuffle of
   the vector corpus; exact answers.
 - ``ann_ivf`` is the scale path: vectors are assigned to their
-  nearest of K deterministic centroids (one broadcast join), probes
-  search only the nearest N_PROBE buckets — candidate set is
-  corpus/K·N_PROBE per probe, and bucket ids are partition-prunable
+  nearest of K deterministic centroids (one Arrow pass), probes
+  search only the nearest IVF_NPROBE buckets — candidate set is
+  corpus/K·IVF_NPROBE per probe, and bucket ids are partition-prunable
   on disk. Recall vs brute force is asserted in tests (≥0.9).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..materialize import spill_to_parquet
@@ -31,107 +37,20 @@ from ..tables import load
 
 DIM = 64  # embedding dimensionality of the test corpus
 
-# Above this dimensionality the unrolled expression tree risks the
-# JVM's 64 KB-per-method codegen ceiling (hit once at r1 with 3
-# unrolled dots in one projection); production embedding dims
-# (768-1536) route to the Arrow-batched fold below instead.
-CODEGEN_DOT_MAX_DIM = 256
+
+# -- exact cosine kernels (see the module docstring) -------------------------
+
+# per-batch score matrix bound (rows x probes or rows x centroids):
+# larger shapes are scored in chunks, so a batch never holds more
+# than this many float64 scores at once
+_CELLS = 1 << 22
+# centroids scored per block by nearest_centroids: each block's best
+# ``keep`` are merged, and the global best ``keep`` are in that union
+_CENTROID_BLOCK = 4096
 
 
-def _dot_arrow(a: Column, b: Column) -> Column:
-    """Arrow-batched sequential-fold dot for high-dim vectors.
-
-    Vectorized across ROWS with numpy but accumulated dimension-by-
-    dimension in float64, so every row's sum order is exactly the
-    scalar left fold — the same bit-exactness contract as the
-    unrolled codegen path, without its dimensionality ceiling.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    # no type hints: `from __future__ import annotations` stringifies
-    # them and pandas_udf can't resolve pd.* from this module's scope
-    def fold_dot(xs, ys):
-        import numpy as np
-        import pandas as pd
-
-        if len(xs) == 0:
-            return pd.Series([], dtype="float64")
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in xs])
-        Y = np.stack([np.asarray(v, dtype=np.float64) for v in ys])
-        acc = np.zeros(X.shape[0])
-        for i in range(X.shape[1]):
-            acc += X[:, i] * Y[:, i]
-        return pd.Series(acc)
-
-    return pandas_udf(fold_dot, "double")(a, b)
-
-
-def _dot(a: Column | str, b: Column | str, dim: int = DIM) -> Column:
-    """Dot product of two vector columns of one row, dim-adaptive —
-    for the pair-join shapes that score every joined pair: near-dup
-    verification, IVF assignment, ``knn_join``, ``ann_ivf``'s
-    SQL-replicated search and the ``ann_search_pq`` rerank. A top-k of
-    a small probe set over a corpus goes through ``cosine_topk``
-    instead, which builds no pair rows.
-
-    dim <= CODEGEN_DOT_MAX_DIM: unrolled into one whole-stage-codegen
-    expression — Spark's higher-order functions (zip_with/aggregate)
-    interpret the lambda per element, ~100x slower on pair joins. The
-    explicit left-associative sum compiles into codegen AND keeps the
-    exact sequential fold order, so it stays bit-identical to
-    DuckDB's list_cosine_similarity over DOUBLE[].
-
-    dim > CODEGEN_DOT_MAX_DIM: Arrow-batched numpy fold (same
-    sequential accumulation, no codegen overflow at 768/1536 dims).
-    """
-    if dim > CODEGEN_DOT_MAX_DIM:
-        a = F.col(a) if isinstance(a, str) else a
-        b = F.col(b) if isinstance(b, str) else b
-        return _dot_arrow(a, b)
-    if isinstance(a, str) and isinstance(b, str):
-        # fast path for named columns: the unrolled sum as ONE
-        # generated SQL string parsed JVM-side — building it with
-        # Column operators costs ~4 py4j round-trips per term
-        # (~0.8 s of driver time per 64-dim dot at r4 profiling,
-        # pure plan-construction overhead on every fresh plan).
-        # Same left-associative fold, same arithmetic.
-        qa, qb = (f"`{c.replace(chr(96), chr(96) * 2)}`" for c in (a, b))
-        return F.expr(
-            " + ".join(
-                f"(CAST({qa}[{i}] AS DOUBLE) * CAST({qb}[{i}] AS DOUBLE))"
-                for i in range(dim)
-            )
-        )
-    expr = None
-    for i in range(1, dim + 1):
-        term = F.element_at(a, i).cast("double") * F.element_at(b, i).cast("double")
-        expr = term if expr is None else expr + term
-    return expr
-
-
-def norm(a: Column | str, dim: int = DIM) -> Column:
-    return F.sqrt(_dot(a, a, dim))
-
-
-def _clamp1(c: Column) -> Column:
-    """DuckDB's list_cosine_similarity CLAMPS its result to [-1, 1]:
-    an identity pair whose rounded quotient lands at 1.0000000000000002
-    comes back as exactly 1.0 (caught by the sf1 validation's
-    replicated vectors). Mirror the clamp so pair scans stay
-    bit-identical at every scale."""
-    return F.least(F.lit(1.0), F.greatest(F.lit(-1.0), c))
-
-
-def cosine(a: Column | str, b: Column | str, dim: int = DIM) -> Column:
-    return _clamp1(_dot(a, b, dim) / (norm(a, dim) * norm(b, dim)))
-
-
-# -- exact cosine top-k of a driver-held probe set ---------------------------
-
-# per-batch score matrix bound (probes x rows): larger probe sets are
-# scored in probe chunks, so a batch never holds more than this many
-# float64 scores at once
-_TOPK_CELLS = 1 << 22
+def _ansi(spark: SparkSession) -> bool:
+    return spark.conf.get("spark.sql.ansi.enabled", "true").lower() == "true"
 
 
 def _vector_block(col, dim: int, ansi: bool):
@@ -154,8 +73,8 @@ def _vector_block(col, dim: int, ansi: bool):
         got = int(lengths[short].min())
         raise IndexError(
             f"[INVALID_ARRAY_INDEX] The index {got} is out of bounds. "
-            f"The array has {got} elements; cosine_topk reads the first "
-            f"{dim} (ANSI GetArrayItem semantics)"
+            f"The array has {got} elements; the cosine kernels read the "
+            f"first {dim} (ANSI GetArrayItem semantics)"
         )
     take = ~row_null & ~short
     values = col.values
@@ -169,14 +88,132 @@ def _vector_block(col, dim: int, ansi: bool):
     return mat, null
 
 
+def _driver_block(vectors, dim: int, ansi: bool):
+    """(matrix [dim, n], null mask, norms) of driver-held vectors."""
+    import numpy as np
+    import pyarrow as pa
+
+    mat, null = _vector_block(
+        pa.array(list(vectors), type=pa.list_(pa.float64())), dim, ansi
+    )
+    return mat, null, np.sqrt(_fold(mat, mat))
+
+
 def _fold(a, b):
     """Row-wise dot of two [dim, ...] arrays, summed left to right
-    from the first term, as the unrolled SQL ``t0 + t1 + ...`` is
-    (starting from 0.0 would turn a sum of ``-0.0`` terms into ``+0.0``)."""
+    from the first term in float64 — DuckDB's
+    ``list_cosine_similarity`` over ``DOUBLE[]`` sums in this order,
+    so the scores are its bits. Starting from the first term, not
+    0.0, keeps the sign of a dot whose terms are all ``-0.0``."""
     acc = a[0] * b[0]
     for i in range(1, a.shape[0]):
-        acc = acc + a[i] * b[i]
+        acc += a[i] * b[i]
     return acc
+
+
+def _clamp(cos):
+    """``least(1, greatest(-1, cos))``: DuckDB clamps the cosine to
+    [-1, 1] (an identity pair whose quotient rounds to
+    1.0000000000000002 comes back 1.0), and Spark orders NaN above
+    every double, so a NaN clamps to 1.0."""
+    import numpy as np
+
+    return np.where(np.isnan(cos), 1.0, np.minimum(1.0, np.maximum(-1.0, cos)))
+
+
+def _sql_cosine(dot, denom, null, ansi: bool):
+    """``_clamp(dot / denom)`` with the SQL's NULL rules: where
+    ``null`` holds (a null vector, or a null element among the first
+    ``dim``) the quotient is NULL, and ``greatest(-1.0, NULL)`` is
+    -1.0. A zero denominator raises DIVIDE_BY_ZERO under ANSI (the
+    session's default) and is NULL without it."""
+    import numpy as np
+
+    null = np.broadcast_to(null, np.shape(dot))
+    zero = ~null & (denom == 0)
+    if zero.any():
+        if ansi:
+            raise ZeroDivisionError(
+                "[DIVIDE_BY_ZERO] Division by zero: a zero-norm "
+                "embedding has no cosine similarity"
+            )
+        null = null | zero
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = _clamp(dot / denom)
+    cos[null] = -1.0
+    return cos
+
+
+def _require_nonzero_norms(nrm) -> None:
+    """Refuse zero-norm embeddings in the numpy shapes that run
+    inside a task. Cosine is undefined for the zero vector: the
+    Arrow kernels raise DIVIDE_BY_ZERO on it under ANSI, as the SQL
+    does, while a bare numpy quotient would silently yield NaN and
+    rank it differently than Spark's NaN-greatest desc ordering."""
+    import numpy as np
+
+    if (np.asarray(nrm) == 0).any():
+        raise ValueError(
+            "zero-norm embedding encountered: cosine similarity is "
+            "undefined for the zero vector (the SQL form raises ANSI "
+            "DIVIDE_BY_ZERO on the same input) — filter or re-embed "
+            "zero vectors before the ANN/KNN operators"
+        )
+
+
+def _cos_matrix(X, x_nrm, C, c_nrm):
+    """[n, m] clamped cosines of the rows of ``X`` [n, dim] against
+    the rows of ``C`` [m, dim], non-zero norms given."""
+    return _clamp(
+        _fold(X.T[:, :, None], C.T[:, None, :]) / (x_nrm[:, None] * c_nrm[None, :])
+    )
+
+
+def _pairs_above(a_ids, A, a_nrm, b_ids, B, b_nrm, threshold: float):
+    """``(a_id, b_id, cos)`` for every row pair of ``A`` x ``B``
+    ([n, dim] float64) with ``a_id < b_id`` and exact cosine
+    ``>= threshold``. A BLAS matmul prefilters with a 1e-6 margin and
+    only the survivors get the exact fold. Lossless: the fold and the
+    blocked BLAS sum differ by at most gamma_dim * sum|x_i y_i|
+    (<= 7.1e-15 |x||y| at dim 64), far inside the margin, so no pair
+    at or above the threshold is prefiltered away; the recheck drops
+    the sub-threshold pairs the margin admits. ``B`` is scored in
+    column blocks, so the approximate matrix stays bounded."""
+    import numpy as np
+
+    _require_nonzero_norms(a_nrm)
+    _require_nonzero_norms(b_nrm)
+    out_a, out_b, out_c = [np.empty(0, np.int64)], [np.empty(0, np.int64)], [np.empty(0)]
+    step = max(1, _CELLS // max(1, len(A)))
+    for s in range(0, len(B), step):
+        Bb, bb_ids, bb_nrm = B[s : s + step], b_ids[s : s + step], b_nrm[s : s + step]
+        approx = A @ Bb.T
+        ai, bi = np.nonzero(
+            (a_ids[:, None] < bb_ids[None, :])
+            & (approx >= (threshold - 1e-6) * (a_nrm[:, None] * bb_nrm[None, :]))
+        )
+        cos = _clamp(_fold(A[ai].T, Bb[bi].T) / (a_nrm[ai] * bb_nrm[bi]))
+        keep = cos >= threshold
+        out_a.append(a_ids[ai][keep])
+        out_b.append(bb_ids[bi][keep])
+        out_c.append(cos[keep])
+    return np.concatenate(out_a), np.concatenate(out_b), np.concatenate(out_c)
+
+
+def _bucket_pairs(threshold: float):
+    """applyInPandas body: the exact near-dup pairs of one bucket of
+    ``(vec_id, embedding)`` rows, as ``(vec_a, vec_b, cos_sim)``."""
+    import numpy as np
+    import pandas as pd
+
+    def fn(pdf):
+        ids = pdf["vec_id"].to_numpy()
+        X = np.array(list(pdf["embedding"]), dtype=np.float32).astype(np.float64)
+        nrm = np.sqrt(_fold(X.T, X.T))
+        a, b, c = _pairs_above(ids, X, nrm, ids, X, nrm, threshold)
+        return pd.DataFrame({"vec_a": a, "vec_b": b, "cos_sim": c})
+
+    return fn
 
 
 def _topk_batch(batch, probes, k, exclude_self, bucket_col, ansi):
@@ -199,33 +236,23 @@ def _topk_batch(batch, probes, k, exclude_self, bucket_col, ansi):
     if bucket_col is not None:
         buckets = batch.column(2).to_numpy(zero_copy_only=False)
     out_p, out_id, out_id_null, out_cos = [], [], [], []
-    step = max(1, _TOPK_CELLS // n)
+    step = max(1, _CELLS // n)
     for s in range(0, len(pids), step):
         e = min(s + step, len(pids))
-        dot = _fold(P[:, s:e, None], X[:, None, :])
-        denom = p_nrm[s:e, None] * x_nrm[None, :]
-        null = p_null[s:e, None] | x_null[None, :]
         cand = np.ones((e - s, n), dtype=bool)
         if bucket_col is not None:
             for j in range(s, e):
                 cand[j - s] = np.isin(buckets, p_buckets[j])
         if exclude_self:  # neighbor_id != probe_id: a NULL id drops
             cand &= ~id_null[None, :] & (ids[None, :] != pids[s:e, None])
-        zero = cand & ~null & (denom == 0)
-        if zero.any():
-            if ansi:
-                raise ZeroDivisionError(
-                    "[DIVIDE_BY_ZERO] Division by zero: a zero-norm "
-                    "vector has no cosine similarity"
-                )
-            null |= zero
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = dot / denom
-        # least(1, greatest(-1, c)): Spark orders NaN above every
-        # double, so NaN clamps to 1.0; greatest skips NULL, so a NULL
-        # quotient clamps to -1.0
-        cos = np.where(np.isnan(cos), 1.0, np.minimum(1.0, np.maximum(-1.0, cos)))
-        cos[null] = -1.0
+        # a pair that is not a candidate is never evaluated, so it
+        # cannot raise DIVIDE_BY_ZERO: score it as NULL and drop it
+        cos = _sql_cosine(
+            _fold(P[:, s:e, None], X[:, None, :]),
+            p_nrm[s:e, None] * x_nrm[None, :],
+            p_null[s:e, None] | x_null[None, :] | ~cand,
+            ansi,
+        )
         for j in range(s, e):
             sel = np.flatnonzero(cand[j - s])
             c = cos[j - s, sel]
@@ -261,9 +288,10 @@ def cosine_topk(
     """Exact cosine top-``k`` of a small driver-held probe set over
     ``corpus``: ``(probe_id, neighbor_id, cos_sim, rnk)`` with ranks
     by cos_sim desc then neighbor_id asc, bit-identical to
-    ``row_number() OVER (PARTITION BY probe_id ORDER BY
-    _clamp1(_dot(pe, ne) / (p_nrm * n_nrm)) DESC, neighbor_id)`` over
-    the probe x corpus pairs.
+    ``row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC,
+    neighbor_id)`` over the probe x corpus pairs, where ``cos`` is
+    ``least(1, greatest(-1, dot(pe, ne) / (p_nrm * n_nrm)))`` with
+    the dot and both norms summed left to right in float64.
 
     ``probes``: ``(probe_id, vector)`` pairs. ``exclude_self`` drops
     the candidate whose id equals the probe id (``neighbor_id !=
@@ -273,24 +301,21 @@ def cosine_topk(
 
     One ``mapInArrow`` pass scores each Arrow batch with numpy and
     keeps its best ``k`` rows per probe; a ``row_number`` window over
-    those few rows gives the final ranks. Every dot and norm is the
-    same left-to-right float64 fold as the unrolled SQL, then the
-    same sqrt, quotient and clamp, so scores are the SQL's bits. Edge
-    cases follow the SQL too: a null vector or a null element among
-    the first ``dim`` makes the quotient NULL, which the clamp's
-    ``greatest(-1.0, NULL)`` turns into -1.0; a NaN quotient clamps to
-    1.0; a zero norm raises DIVIDE_BY_ZERO and a vector shorter than
-    ``dim`` raises INVALID_ARRAY_INDEX under ANSI (the session's
-    default; without ANSI both give a NULL quotient)."""
+    those few rows gives the final ranks. Edge cases follow the SQL:
+    a null vector or a null element among the first ``dim`` makes the
+    quotient NULL, which the clamp's ``greatest(-1.0, NULL)`` turns
+    into -1.0; a NaN quotient clamps to 1.0; a zero norm raises
+    DIVIDE_BY_ZERO and a vector shorter than ``dim`` raises
+    INVALID_ARRAY_INDEX under ANSI (the session's default; without
+    ANSI both give a NULL quotient)."""
     import numpy as np
-    import pyarrow as pa
     from pyspark.sql import Window
     from pyspark.sql.types import LongType
 
     from ..session import local_frame
 
     spark = corpus.sparkSession
-    ansi = spark.conf.get("spark.sql.ansi.enabled", "true").lower() == "true"
+    ansi = _ansi(spark)
     out_schema = "probe_id long, neighbor_id long, cos_sim double"
     probes = list(probes)
     if not probes:
@@ -302,10 +327,7 @@ def cosine_topk(
             np.asarray(sorted(probe_buckets.get(p, ())), dtype=np.int64)
             for p, _ in probes
         ]
-    P, p_null = _vector_block(
-        pa.array([v for _, v in probes], type=pa.list_(pa.float64())), dim, ansi
-    )
-    p_nrm = np.sqrt(_fold(P, P))
+    P, p_null, p_nrm = _driver_block((v for _, v in probes), dim, ansi)
     packed = (pids, P, p_null, p_nrm, p_buckets, dim)
 
     def topk(batches):
@@ -332,6 +354,133 @@ def cosine_topk(
     )
 
 
+def _nearest(X, x_null, x_nrm, centroids, keep: int, ansi: bool):
+    """Ids [n, min(keep, m)] of the nearest centroids of each column
+    of ``X`` [dim, n], by cos desc then centroid id asc; ``centroids``
+    is ``(ids, matrix [dim, m], null mask, norms)``."""
+    import numpy as np
+
+    c_ids, C, c_null, c_nrm = centroids
+    kk = min(keep, len(c_ids))
+    best_cos, best_ids = [], []
+    for s in range(0, len(c_ids), _CENTROID_BLOCK):
+        e = min(s + _CENTROID_BLOCK, len(c_ids))
+        cos = _sql_cosine(
+            _fold(X[:, :, None], C[:, None, s:e]),
+            x_nrm[:, None] * c_nrm[None, s:e],
+            x_null[:, None] | c_null[None, s:e],
+            ansi,
+        )
+        ids = c_ids[s:e]
+        top = np.lexsort((np.broadcast_to(ids, cos.shape), -cos), axis=1)[:, :kk]
+        best_cos.append(np.take_along_axis(cos, top, 1))
+        best_ids.append(ids[top])
+    cos, ids = np.concatenate(best_cos, 1), np.concatenate(best_ids, 1)
+    return np.take_along_axis(ids, np.lexsort((ids, -cos), axis=1)[:, :kk], 1)
+
+
+def _centroid_block(centroids, dim: int, ansi: bool):
+    """``_nearest``'s centroid tuple of ``(centroid_id, vector)`` pairs."""
+    import numpy as np
+
+    centroids = list(centroids)
+    C, c_null, c_nrm = _driver_block((v for _, v in centroids), dim, ansi)
+    return np.array([int(c) for c, _ in centroids], dtype=np.int64), C, c_null, c_nrm
+
+
+def nearest_centroids(
+    frame: DataFrame,
+    id_col: str,
+    vec_col: str,
+    centroids,
+    keep: int,
+    dim: int = DIM,
+) -> DataFrame:
+    """``(id_col, centroid_id, crnk)``: each row's ``keep`` nearest of
+    the driver-held ``centroids`` — ``(centroid_id, vector)`` pairs —
+    ranked from 1, as ``row_number() OVER (PARTITION BY id ORDER BY
+    cos DESC, centroid_id)`` ranks the row x centroid pairs, with
+    ``cos`` and its edge cases those of ``cosine_topk``. With fewer
+    than ``keep`` centroids every one is ranked.
+
+    One ``mapInArrow`` pass. Centroids are scored in blocks of
+    ``_CENTROID_BLOCK`` and each block's best ``keep`` merged, so a
+    batch never holds a rows x centroids matrix."""
+    import numpy as np
+    import pyarrow as pa
+
+    from ..session import local_frame
+
+    spark = frame.sparkSession
+    ansi = _ansi(spark)
+    cents = _centroid_block(centroids, dim, ansi)
+    id_type = frame.schema[id_col].dataType.simpleString()
+    schema = f"`{id_col}` {id_type}, centroid_id long, crnk int"
+    if not len(cents[0]):
+        return local_frame(spark, [], schema)
+    step = max(1, _CELLS // min(len(cents[0]), _CENTROID_BLOCK))
+
+    def assign(batches):
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            X, x_null = _vector_block(batch.column(1), dim, ansi)
+            x_nrm = np.sqrt(_fold(X, X))
+            top = np.concatenate(
+                [
+                    _nearest(
+                        X[:, s : s + step], x_null[s : s + step],
+                        x_nrm[s : s + step], cents, keep, ansi,
+                    )
+                    for s in range(0, n, step)
+                ]
+            )
+            kk = top.shape[1]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(0).take(pa.array(np.repeat(np.arange(n), kk))),
+                    pa.array(top.reshape(-1)),
+                    pa.array(np.tile(np.arange(1, kk + 1, dtype=np.int32), n)),
+                ],
+                names=[id_col, "centroid_id", "crnk"],
+            )
+
+    return frame.select(id_col, vec_col).mapInArrow(assign, schema)
+
+
+def pair_cosine(
+    frame: DataFrame, a_col: str, b_col: str, dim: int = DIM
+) -> DataFrame:
+    """``frame`` with a ``cos_sim`` column: the cosine of the two
+    vector columns of each row, scored as ``cosine_topk`` scores a
+    pair, edge cases included. One ``mapInArrow`` pass."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    ansi = _ansi(frame.sparkSession)
+    ia, ib = frame.columns.index(a_col), frame.columns.index(b_col)
+
+    def score(batches):
+        for batch in batches:
+            A, a_null = _vector_block(batch.column(ia), dim, ansi)
+            B, b_null = _vector_block(batch.column(ib), dim, ansi)
+            cos = _sql_cosine(
+                _fold(A, B),
+                np.sqrt(_fold(A, A)) * np.sqrt(_fold(B, B)),
+                a_null | b_null,
+                ansi,
+            )
+            yield pa.RecordBatch.from_arrays(
+                batch.columns + [pa.array(cos, type=pa.float64())],
+                names=batch.schema.names + ["cos_sim"],
+            )
+
+    schema = StructType(frame.schema.fields + [StructField("cos_sim", DoubleType())])
+    return frame.mapInArrow(score, schema)
+
+
 NEARDUP_THRESHOLD = 0.4
 
 # embedding_neardup is the O(N²) exactness baseline: it broadcasts
@@ -354,47 +503,16 @@ def _corpus_matrix(emb: DataFrame):
     return ids, mat
 
 
-def _seq_norms(mat):
-    """Row norms accumulated dimension-sequentially (bit-identical
-    to the scalar fold DuckDB runs)."""
-    import numpy as np
-
-    acc = np.zeros(mat.shape[0])
-    for i in range(mat.shape[1]):
-        acc += mat[:, i] * mat[:, i]
-    return np.sqrt(acc)
-
-
-def _require_nonzero_norms(nrm) -> None:
-    """Refuse zero-norm embeddings LOUDLY (r10 advice). Cosine
-    similarity is undefined for the zero vector: the declarative
-    forms raise Spark's ANSI DIVIDE_BY_ZERO on the same input,
-    while the numpy kernels would silently produce NaN cosines and
-    rank them differently than Spark's NaN-greatest desc ordering —
-    breaking the documented bit-identity contract between the two
-    forms. One shared refusal at every norm computation keeps the
-    contract honest: both forms fail, neither emits NaN rankings."""
-    import numpy as np
-
-    if (np.asarray(nrm) == 0).any():
-        raise ValueError(
-            "zero-norm embedding encountered: cosine similarity is "
-            "undefined for the zero vector (the declarative form "
-            "raises ANSI DIVIDE_BY_ZERO on the same input) — filter "
-            "or re-embed zero vectors before the ANN/KNN operators"
-        )
-
-
 def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs cosine ≥ threshold, exact.
 
     Arrow-vectorized pair scan: each executor batch of vectors is
-    scored against the broadcast corpus matrix with numpy, but the
-    accumulation loops over *dimensions* (vectorized across pairs),
-    so every pair's sum order is exactly the scalar sequential fold
-    — bit-identical to the DuckDB oracle, ~1000x faster than
-    per-pair expression evaluation. Inherently O(N²): this operator
-    is the exactness baseline; ann_ivf is the 100 TB path.
+    scored against the broadcast corpus matrix by ``_pairs_above`` —
+    a BLAS prefilter at a proven-lossless margin, then the exact fold
+    for the survivors only (one dgemm pass instead of 64 broadcast
+    passes: the sf1 pair scan went 54 s -> ~8 s), so every emitted
+    score is the DuckDB oracle's bits. Inherently O(N²): this
+    operator is the exactness baseline; ann_ivf is the 100 TB path.
     """
     import numpy as np
     import pandas as pd
@@ -409,73 +527,19 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "SemDeDup-style bucketed scale path) for larger corpora"
         )
     ids, corpus = _corpus_matrix(emb)
-    corpus_norms = _seq_norms(corpus)
-    bc = spark.sparkContext.broadcast((ids, corpus, corpus_norms))
+    bc = spark.sparkContext.broadcast((ids, corpus, np.sqrt(_fold(corpus.T, corpus.T))))
 
     def score(batches):
-        # Two-phase exactness (r5): a BLAS matmul prefilters the
-        # pair matrix with a 1e-6 relative margin, then ONLY the
-        # surviving pairs get the dimension-sequential fold that is
-        # bit-identical to DuckDB. Provably lossless: the fold and
-        # the blocked BLAS sum differ by at most gamma_64*Σ|x_i·y_i|
-        # <= 7.1e-15 * (|x||y|), far inside the margin, so no pair
-        # with exact cosine >= threshold can be prefiltered away;
-        # sub-threshold pairs admitted by the margin are discarded
-        # by the exact recheck. Cuts the hot loop's memory traffic
-        # 64x (one dgemm pass vs 64 broadcast passes): sf1 pair
-        # scan 54s -> ~8s.
         c_ids, C, c_nrm = bc.value
-        # BLOCK the corpus columns: an unblocked batch x corpus
-        # score matrix is batch_rows*n_corpus*8 bytes — far past
-        # executor memory well under the NEARDUP_MAX_CORPUS guard
-        # (r8 review finding; the bucket_verify sibling blocks for
-        # the same reason). Pair selection and the exact fold are
-        # per-pair, so blocking changes no value.
-        blk = max(1, (64 << 20) // max(1, 8 * 4096))  # ~2048 cols
         for pdf in batches:
+            if len(pdf) == 0:
+                continue
             X = np.array(list(pdf["embedding"]), dtype=np.float32).astype(np.float64)
-            x_ids = pdf["vec_id"].to_numpy()
-            if len(X) == 0:
-                continue
-            x_nrm = _seq_norms(X)
-            out_a, out_b, out_c = [], [], []
-            for s in range(0, C.shape[0], blk):
-                Cb = C[s : s + blk]
-                cb_ids = c_ids[s : s + blk]
-                cb_nrm = c_nrm[s : s + blk]
-                approx = X @ Cb.T
-                denom = x_nrm[:, None] * cb_nrm[None, :]
-                ai, bi = np.nonzero(
-                    (x_ids[:, None] < cb_ids[None, :])
-                    & (approx >= (NEARDUP_THRESHOLD - 1e-6) * denom)
-                )
-                if len(ai) == 0:
-                    continue
-                A, B = X[ai], Cb[bi]
-                acc = np.zeros(len(ai))
-                for i in range(C.shape[1]):  # exact sequential fold
-                    acc += A[:, i] * B[:, i]
-                # DuckDB clamps cosine into [-1, 1] — mirror it
-                cos = np.clip(
-                    acc / (x_nrm[ai] * cb_nrm[bi]), -1.0, 1.0
-                )
-                keep = cos >= NEARDUP_THRESHOLD
-                out_a.append(x_ids[ai][keep])
-                out_b.append(cb_ids[bi][keep])
-                out_c.append(cos[keep])
-            if not out_a:
-                yield pd.DataFrame(
-                    {"vec_a": [], "vec_b": [], "cos_sim": []}
-                ).astype({"vec_a": "int64", "vec_b": "int64",
-                          "cos_sim": "float64"})
-                continue
-            yield pd.DataFrame(
-                {
-                    "vec_a": np.concatenate(out_a),
-                    "vec_b": np.concatenate(out_b),
-                    "cos_sim": np.concatenate(out_c),
-                }
+            a, b, c = _pairs_above(
+                pdf["vec_id"].to_numpy(), X, np.sqrt(_fold(X.T, X.T)),
+                c_ids, C, c_nrm, NEARDUP_THRESHOLD,
             )
+            yield pd.DataFrame({"vec_a": a, "vec_b": b, "cos_sim": c})
 
     # a small parquet file arrives as ONE input partition, which
     # would serialize the whole O(N·corpus) scan onto one core (925s
@@ -549,103 +613,38 @@ IVF_K = 16  # centroid count (sqrt-ish of local corpus; 4096+ at scale)
 IVF_NPROBE = 4
 
 
-def _ivf_assignments(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Deterministic IVF: centroids are the K lowest-vec_id vectors
-    (stand-in for a k-means fit, which would be precomputed and
-    broadcast in production). Returns (centroids, assignments).
-
-    Norms are projected BEFORE the fan-out join: an inlined
-    cosine() holds three
-    unrolled 64-term dots per projection — past janino's 64 KB
-    method limit, forcing the whole assignment stage back to
-    interpreted eval (r8 review; arithmetic unchanged:
-    dot/(nrm*c_nrm), same fold, same clamp)."""
-    from pyspark.sql import Window
-
-    emb_n = emb.select(
-        "vec_id", "embedding", norm("embedding").alias("nrm")
-    )
-    centroids = emb_n.where(F.col("vec_id") < IVF_K).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    scored = emb_n.crossJoin(F.broadcast(centroids)).select(
-        "vec_id",
-        "embedding",
-        "nrm",
-        "centroid_id",
-        _clamp1(
-            _dot("embedding", "ce") / (F.col("nrm") * F.col("c_nrm"))
-        ).alias("c_sim"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("c_sim"), F.asc("centroid_id"))
-    assignments = (
-        scored.withColumn("crnk", F.row_number().over(w))
-        .where(F.col("crnk") == 1)
-        .select("vec_id", "embedding", "nrm", "centroid_id")
-    )
-    return centroids, assignments
-
-
 def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with deterministic seed centroids (the K lowest-vec_id
     vectors). Because every step — centroid pick, nearest-centroid
     assignment, nprobe bucket choice, in-bucket exact cosine top-k —
     is a deterministic composition of cosine + rank with explicit tie
     breaks, the DuckDB oracle replicates the ALGORITHM itself
-    (ANN_IVF_SQL), so this row is hash-exact (r5; previously
-    rows-only). The k-means-refined variants (ann_ivf_indexed /
-    ann_ivf_pq) can't be SQL-replicated and use the recall-flag
-    pattern instead."""
-    from pyspark.sql import Window
+    (ANN_IVF_SQL), so this row is hash-exact. The k-means-refined
+    variants (ann_ivf_indexed / ann_ivf_pq) can't be SQL-replicated
+    and use the recall-flag pattern instead.
 
+    Three steps: ``nearest_centroids`` assigns every vector to its
+    bucket in one Arrow pass; the same ranking, run on the driver,
+    picks each probe's IVF_NPROBE buckets; ``cosine_topk`` scores
+    only the rows of those buckets."""
     emb = load(spark, sf_dir, "embeddings")
-    centroids, assignments = _ivf_assignments(emb)
-    # probe norms projected once, same rationale as _ivf_assignments
-    probes = emb.where(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("embedding").alias("pe"),
-        norm("embedding").alias("p_nrm"),
+    rows = (
+        emb.where(F.col("vec_id") < max(IVF_K, N_PROBES))
+        .select("vec_id", "embedding")
+        .collect()
     )
-    # nearest IVF_NPROBE buckets per probe
-    probe_buckets = (
-        probes.crossJoin(F.broadcast(centroids))
-        .select(
-            "probe_id", "pe", "p_nrm", "centroid_id",
-            _clamp1(
-                _dot("pe", "ce") / (F.col("p_nrm") * F.col("c_nrm"))
-            ).alias("c_sim"),
-        )
-        .withColumn(
-            "brnk",
-            F.row_number().over(
-                Window.partitionBy("probe_id").orderBy(
-                    F.desc("c_sim"), F.asc("centroid_id")
-                )
-            ),
-        )
-        .where(F.col("brnk") <= IVF_NPROBE)
-        .select("probe_id", "pe", "p_nrm", "centroid_id")
-    )
-    # search only assigned buckets (equi-join on centroid_id)
-    cands = probe_buckets.join(assignments, "centroid_id").where(
-        F.col("vec_id") != F.col("probe_id")
-    )
-    scored = cands.select(
-        "probe_id",
-        F.col("vec_id").alias("neighbor_id"),
-        _clamp1(
-            _dot("pe", "embedding") / (F.col("p_nrm") * F.col("nrm"))
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= TOP_K)
-        .select("probe_id", "neighbor_id", "cos_sim", "rnk")
-        .orderBy("probe_id", "rnk")
-    )
+    cents = [(r["vec_id"], r["embedding"]) for r in rows if r["vec_id"] < IVF_K]
+    probes = [(r["vec_id"], r["embedding"]) for r in rows if r["vec_id"] < N_PROBES]
+    ansi = _ansi(spark)
+    P, p_null, p_nrm = _driver_block((v for _, v in probes), DIM, ansi)
+    nearest = _nearest(P, p_null, p_nrm, _centroid_block(cents, DIM, ansi), IVF_NPROBE, ansi)
+    probe_buckets = {p: nearest[i].tolist() for i, (p, _) in enumerate(probes)}
+    assigned = nearest_centroids(emb, "vec_id", "embedding", cents, keep=1)
+    corpus = emb.select("vec_id", "embedding").join(assigned, "vec_id")
+    return cosine_topk(
+        corpus, "vec_id", "embedding", probes, TOP_K,
+        bucket_col="centroid_id", probe_buckets=probe_buckets,
+    ).orderBy("probe_id", "rnk")
 
 
 ANN_IVF_SQL = f"""
@@ -807,76 +806,25 @@ def lsh_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Per-BUCKET verification, not per-PAIR: shuffling every bucket
     # collision as a candidate row then equi-joining the vectors back
     # twice materializes O(Σ n_bucket²) rows — 153M at sf1, the whole
-    # wall-time. Instead the (band, bucket) groups (one equi-shuffle,
-    # the same keys as before) each run a blocked numpy pairwise
-    # cosine and emit ONLY the pairs that clear the threshold, so
-    # the candidate set lives as vectorized Arrow batches and dies
-    # inside the task. Survivor count is O(true near-dups × bands),
-    # orders of magnitude smaller. Bucket sizes are bounded by the
-    # band width (2^bits buckets/band; tune LSH_PLANES up if a
-    # corpus skews a bucket past executor memory) and the matmul is
-    # row-blocked so peak memory is O(block × n_bucket).
-    def bucket_verify(pdf):
-        ids = pdf["vec_id"].to_numpy()
-        X = np.array(list(pdf["embedding"]), dtype=np.float32).astype(np.float64)
-        nrm = np.sqrt((X * X).sum(axis=1))
-        out_a, out_b = [], []
-        blk = 1024
-        for i0 in range(0, len(X), blk):
-            C = X[i0 : i0 + blk] @ X.T
-            C /= nrm[i0 : i0 + blk, None]
-            C /= nrm[None, :]
-            # the proven-lossless 1e-6 margin (the `score` prefilter
-            # discipline): a borderline true pair whose BLAS cosine
-            # rounds a ulp under the threshold must still reach the
-            # exact JVM recheck, which alone decides (r8 review)
-            ii, jj = np.nonzero(C >= NEARDUP_THRESHOLD - 1e-6)
-            ii += i0
-            keep = ids[ii] < ids[jj]
-            out_a.append(ids[ii][keep])
-            out_b.append(ids[jj][keep])
-        return pd.DataFrame(
-            {"vec_a": np.concatenate(out_a), "vec_b": np.concatenate(out_b)}
+    # wall-time. Instead the (band, bucket) groups (one equi-shuffle)
+    # each run ``_bucket_pairs`` — a blocked matmul prefilter, then
+    # the exact fold — and emit ONLY the pairs that clear the
+    # threshold, so the candidate set lives and dies inside the task.
+    # Survivor count is O(true near-dups × bands). Bucket sizes are
+    # bounded by the band width (2^bits buckets/band; tune LSH_PLANES
+    # up if a corpus skews a bucket past executor memory). A pair
+    # colliding in several bands carries the same score in each, so
+    # ``distinct`` keeps one.
+    return (
+        sigs.join(emb.select("vec_id", "embedding"), "vec_id")
+        .groupBy("band", "bucket")
+        .applyInPandas(
+            _bucket_pairs(NEARDUP_THRESHOLD),
+            schema="vec_a long, vec_b long, cos_sim double",
         )
-
-    withvec = sigs.join(emb.select("vec_id", "embedding"), "vec_id")
-    cand = (
-        withvec.groupBy("band", "bucket")
-        .applyInPandas(bucket_verify, schema="vec_a long, vec_b long")
         .distinct()
+        .orderBy("vec_a", "vec_b")
     )
-    # norms are computed per-vector BEFORE the pair join: the
-    # post-join projection then holds ONE unrolled 64-term dot
-    # product instead of three, keeping the generated code under
-    # janino's 64 KB method limit (three inline dots overflow it and
-    # force the whole stage back to interpreted eval). Arithmetic is
-    # unchanged: dot(a,b) / (norm_a * norm_b), same fold order.
-    ea = emb.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("emb_a"),
-        norm("embedding").alias("norm_a"),
-    )
-    eb = emb.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("emb_b"),
-        norm("embedding").alias("norm_b"),
-    )
-    verified = (
-        cand.join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            (
-                _clamp1(
-                    _dot("emb_a", "emb_b")
-                    / (F.col("norm_a") * F.col("norm_b"))
-                )
-            ).alias("cos_sim"),
-        )
-        .where(F.col("cos_sim") >= NEARDUP_THRESHOLD)
-    )
-    return verified.orderBy("vec_a", "vec_b")
 
 
 # embedding_neardup_lsh is QUARANTINED as a small-scale diagnostic:
@@ -1458,8 +1406,7 @@ def two_level_assign(
     Scale shape: per-vector work is coarse_m + probes * k/coarse_m
     dots (vs k flat — O(sqrt(k)) at coarse_m ~ sqrt(k)); the driver
     holds coarse_m vectors (vs k); the cogroup shuffles each vector
-    ``probes`` times. Every cosine keeps the DIMENSION-SEQUENTIAL
-    fold, so the two-level selection is bit-replicable by the DuckDB
+    ``probes`` times. Every cosine is ``_fold``'s, so the two-level selection is bit-replicable by the DuckDB
     oracle (embedding_neardup_ivf pins it hash-exact).
 
     Returns (vec_id, centroid_id, crnk) with crnk in 1..keep_n;
@@ -1479,7 +1426,7 @@ def two_level_assign(
         [r["embedding"] for r in coarse_rows], dtype=np.float32
     ).astype(np.float64)
     s_ids = np.array([r["vec_id"] for r in coarse_rows], dtype=np.int64)
-    s_nrm = _seq_norms(S)
+    s_nrm = np.sqrt(_fold(S.T, S.T))
     bc = spark.sparkContext.broadcast((s_ids, S, s_nrm))
 
     def nearest_cells(n_cells: int):
@@ -1492,14 +1439,9 @@ def two_level_assign(
                 X = np.array(
                     list(pdf["embedding"]), dtype=np.float32
                 ).astype(np.float64)
-                nx = _seq_norms(X)
+                nx = np.sqrt(_fold(X.T, X.T))
                 _require_nonzero_norms(nx)
-                acc = np.zeros((len(X), len(Sm)))
-                for d in range(Sm.shape[1]):
-                    acc += X[:, d, None] * Sm[None, :, d]
-                cos = np.clip(
-                    acc / (nx[:, None] * nrm_s[None, :]), -1.0, 1.0
-                )
+                cos = _cos_matrix(X, nx, Sm, nrm_s)
                 order = np.lexsort(
                     (np.broadcast_to(ids_s, cos.shape), -cos), axis=1
                 )[:, :keep]
@@ -1541,7 +1483,7 @@ def two_level_assign(
             FM = np.array(
                 [t[1] for t in rows_], dtype=np.float32
             ).astype(np.float64)
-            packed[c] = (f_ids, FM, _seq_norms(FM))
+            packed[c] = (f_ids, FM, np.sqrt(_fold(FM.T, FM.T)))
         bc_fine = spark.sparkContext.broadcast(packed)
 
         def assign_bcast(batches):
@@ -1554,15 +1496,10 @@ def two_level_assign(
                 X = np.array(
                     list(pdf["embedding"]), dtype=np.float32
                 ).astype(np.float64)
-                nx = _seq_norms(X)
+                nx = np.sqrt(_fold(X.T, X.T))
                 _require_nonzero_norms(nx)
                 vid = pdf["vec_id"].to_numpy()
-                acc = np.zeros((len(X), len(Sm)))
-                for d in range(Sm.shape[1]):
-                    acc += X[:, d, None] * Sm[None, :, d]
-                cos_s = np.clip(
-                    acc / (nx[:, None] * nrm_s[None, :]), -1.0, 1.0
-                )
+                cos_s = _cos_matrix(X, nx, Sm, nrm_s)
                 probe_cells = ids_s[
                     np.lexsort(
                         (np.broadcast_to(ids_s, cos_s.shape), -cos_s),
@@ -1580,15 +1517,8 @@ def two_level_assign(
                             continue
                         m = col == c
                         f_ids, FM, f_nrm = ent
-                        Xs, nxs = X[m], nx[m]
-                        accf = np.zeros((len(Xs), len(FM)))
-                        for d in range(FM.shape[1]):
-                            accf += Xs[:, d, None] * FM[None, :, d]
-                        cosf = np.clip(
-                            accf / (nxs[:, None] * f_nrm[None, :]),
-                            -1.0,
-                            1.0,
-                        )
+                        Xs = X[m]
+                        cosf = _cos_matrix(Xs, nx[m], FM, f_nrm)
                         kk = min(keep_n, len(FM))
                         o = np.lexsort(
                             (np.broadcast_to(f_ids, cosf.shape), -cosf),
@@ -1660,11 +1590,8 @@ def two_level_assign(
             np.float64
         )
         c_ids = right["centroid_id"].to_numpy()
-        nx, nc = _seq_norms(X), _seq_norms(C)
-        acc = np.zeros((len(X), len(C)))
-        for d in range(C.shape[1]):
-            acc += X[:, d, None] * C[None, :, d]
-        cos = np.clip(acc / (nx[:, None] * nc[None, :]), -1.0, 1.0)
+        nx, nc = np.sqrt(_fold(X.T, X.T)), np.sqrt(_fold(C.T, C.T))
+        cos = _cos_matrix(X, nx, C, nc)
         keep = min(keep_n, len(C))
         order = np.lexsort(
             (np.broadcast_to(c_ids, cos.shape), -cos), axis=1
@@ -1737,18 +1664,12 @@ def ivf_neardup_pairs(
     quadratic work, and recall for those is audited in
     tests/test_llm_ops.py, not promised.
 
-    Assignment is Arrow-batched numpy with DIMENSION-SEQUENTIAL
-    accumulation (the embedding_neardup fold trick): every
-    vector-centroid cosine is bit-identical to the scalar fold
-    DuckDB evaluates, so the rank-2 cut can never disagree with the
-    oracle's ROW_NUMBER. The in-bucket scan prefilters with one
-    dgemm at a proven-lossless 1e-6 margin, then the survivors are
-    exact-rechecked JVM-side with the same fold-ordered expression
-    the oracle uses."""
+    Assignment is ``nearest_centroids`` (or ``two_level_assign``):
+    every vector-centroid cosine is the fold DuckDB evaluates, so the
+    rank-2 cut can never disagree with the oracle's ROW_NUMBER. The
+    in-bucket scan is ``_bucket_pairs``: a matmul prefilter at a
+    proven-lossless 1e-6 margin, then the exact fold, in the task."""
     import math
-
-    import numpy as np
-    import pandas as pd
 
     emb = load(spark, sf_dir, "embeddings")
     if coarse_m is None and k >= TWO_LEVEL_MIN_K:
@@ -1764,141 +1685,22 @@ def ivf_neardup_pairs(
             NDUP_ASSIGN,
             coarse_m,
             probes or TWO_LEVEL_PROBES,
-        ).select("vec_id", "centroid_id")
-        return _neardup_from_assigned(spark, emb, assigned, threshold)
-    cent_rows = (
-        emb.select("vec_id", "embedding").orderBy("vec_id").limit(k).collect()
-    )
-    C = np.array([r["embedding"] for r in cent_rows], dtype=np.float32).astype(
-        np.float64
-    )
-    c_ids = np.array([r["vec_id"] for r in cent_rows], dtype=np.int64)
-    c_nrm = _seq_norms(C)
-    bc = spark.sparkContext.broadcast((c_ids, C, c_nrm))
-
-    def assign(batches):
-        ids_c, Cm, nrm_c = bc.value
-        # clamp for tiny corpora / small k (r8 review: a fixed slice
-        # crashed with mismatched column lengths when k < NDUP_ASSIGN)
-        keep_n = min(NDUP_ASSIGN, len(Cm))
-        # BLOCK the centroids: at the operator's own k ~ n/500 recipe
-        # a dense batch x k accumulator is (rows*k*8) bytes — 160 GB
-        # per task at n=1e9 (r8 review). Per-block top-keep_n
-        # candidates then one merge select the same global top set:
-        # every per-pair cosine is still the full-dimension
-        # sequential fold (bit-identical), and any global top-keep_n
-        # member is its block's top-keep_n, so the candidate union
-        # provably contains the answer; the final lexsort applies
-        # the same (cos DESC, id ASC) tie-break.
-        cblk = 4096
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(list(pdf["embedding"]), dtype=np.float32).astype(
-                np.float64
-            )
-            nx = _seq_norms(X)
-            _require_nonzero_norms(nx)
-            rows = np.arange(len(X))[:, None]
-            cand_cos, cand_ids = [], []
-            for s in range(0, len(Cm), cblk):
-                Cb = Cm[s : s + cblk]
-                ib = ids_c[s : s + cblk]
-                nb = nrm_c[s : s + cblk]
-                # dimension-sequential dot: acc order per (x, c)
-                # pair is the scalar fold — bit-identical to the
-                # oracle regardless of blocking
-                acc = np.zeros((len(X), len(Cb)))
-                for d in range(Cb.shape[1]):
-                    acc += X[:, d, None] * Cb[None, :, d]
-                cos = np.clip(
-                    acc / (nx[:, None] * nb[None, :]), -1.0, 1.0
-                )
-                order = np.lexsort(
-                    (np.broadcast_to(ib, cos.shape), -cos), axis=1
-                )
-                t = order[:, : min(keep_n, len(Cb))]
-                cand_cos.append(cos[rows, t])
-                cand_ids.append(ib[t])
-            CC = np.concatenate(cand_cos, axis=1)
-            CI = np.concatenate(cand_ids, axis=1)
-            merged = np.lexsort((CI, -CC), axis=1)[:, :keep_n]
-            top_ids = CI[rows, merged]
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(
-                        pdf["vec_id"].to_numpy(), keep_n
-                    ),
-                    "centroid_id": top_ids.reshape(-1),
-                }
-            )
-
-    assigned = emb.select("vec_id", "embedding").mapInPandas(
-        assign, schema="vec_id long, centroid_id long"
-    )
-    return _neardup_from_assigned(spark, emb, assigned, threshold)
-
-
-def _neardup_from_assigned(
-    spark: SparkSession,
-    emb: DataFrame,
-    assigned: DataFrame,
-    threshold: float,
-) -> DataFrame:
-    """Shared ivf_neardup_pairs tail: exact in-bucket pair scan over
-    (vec_id, centroid_id) assignments (flat or two-level), followed
-    by the JVM-side fold-ordered exact recheck the oracle mirrors."""
-    import numpy as np
-    import pandas as pd
-
-    def bucket_pairs(pdf):
-        ids = pdf["vec_id"].to_numpy()
-        X = np.array(list(pdf["embedding"]), dtype=np.float32).astype(
-            np.float64
         )
-        nrm = _seq_norms(X)
-        out_a, out_b = [], []
-        blk = 1024
-        for i0 in range(0, len(X), blk):
-            Cm = X[i0 : i0 + blk] @ X.T
-            Cm /= nrm[i0 : i0 + blk, None]
-            Cm /= nrm[None, :]
-            ii, jj = np.nonzero(Cm >= threshold - 1e-6)  # margin prefilter
-            ii += i0
-            keep = ids[ii] < ids[jj]
-            out_a.append(ids[ii][keep])
-            out_b.append(ids[jj][keep])
-        return pd.DataFrame(
-            {"vec_a": np.concatenate(out_a), "vec_b": np.concatenate(out_b)}
-        )
-
-    cand = (
-        assigned.join(emb.select("vec_id", "embedding"), "vec_id")
-        .groupBy("centroid_id")
-        .applyInPandas(bucket_pairs, schema="vec_a long, vec_b long")
-        .distinct()
-    )
-    ea = emb.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("emb_a"),
-        norm("embedding").alias("norm_a"),
-    )
-    eb = emb.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("emb_b"),
-        norm("embedding").alias("norm_b"),
-    )
+    else:
+        cents = [
+            (r["vec_id"], r["embedding"])
+            for r in emb.select("vec_id", "embedding").orderBy("vec_id").limit(k).collect()
+        ]
+        assigned = nearest_centroids(emb, "vec_id", "embedding", cents, NDUP_ASSIGN)
+    # a pair sharing both buckets is scored in each, to the same bits
     return (
-        cand.join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            _clamp1(
-                _dot("emb_a", "emb_b") / (F.col("norm_a") * F.col("norm_b"))
-            ).alias("cos_sim"),
+        assigned.select("vec_id", "centroid_id")
+        .join(emb.select("vec_id", "embedding"), "vec_id")
+        .groupBy("centroid_id")
+        .applyInPandas(
+            _bucket_pairs(threshold), schema="vec_a long, vec_b long, cos_sim double"
         )
-        .where(F.col("cos_sim") >= threshold)
+        .distinct()
         .orderBy("vec_a", "vec_b")
     )
 

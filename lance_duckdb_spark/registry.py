@@ -170,15 +170,6 @@ _GREEN_R4 = {
     "window_range_frames", "correlated_subquery", "exists_correlated",
 }
 
-# Queries whose HASHED OUTPUT changed in r5 (rows-only → hash-exact
-# conversions): their old driver rows don't count as hash verification.
-# All six were recorded hash-exact by the r5 driver (CORRECTNESS_r05), so
-# the set is retired from the recheck tier; kept for the historical record.
-_RECHECK_R5 = {
-    "approx_quantiles_vs_exact", "ann_ivf", "ann_ivf_indexed",
-    "ann_ivf_pq", "embedding_neardup_lsh", "sketch_distinct_rollup",
-}
-
 # All 50 rows CORRECTNESS_r05 recorded — every one hash-exact.
 _GREEN_R5 = {
     "ann_ivf", "ann_ivf_indexed", "ann_ivf_pq", "anti_semi_joins",
@@ -195,10 +186,6 @@ _GREEN_R5 = {
     "tpch_q21", "tpch_q22", "tpch_q7", "tpch_q8", "tpch_q9",
     "url_domain_stats", "window_rank_functions",
 }
-
-# Queries whose HASHED OUTPUT changed in r6 (none — the r6 perf work
-# was hash-preserving); kept for the historical record.
-_RECHECK_R6: set = set()
 
 # All 50 rows CORRECTNESS_r06 recorded — every one hash-exact.
 _GREEN_R6 = {
@@ -219,10 +206,6 @@ _GREEN_R6 = {
     "tpch_q1", "tpch_q10", "tpch_q14", "tpch_q3", "tpch_q4", "tpch_q5",
     "tpch_q6",
 }
-
-# Queries whose HASHED OUTPUT changes in r7 go here (treated as
-# never-verified so they lead the window).
-_RECHECK_R7: set = set()
 
 # All 50 rows CORRECTNESS_r07 recorded — every one green (the 11
 # r7-new queries, the 20 last green in r4, and the 19 stalest r5
@@ -246,15 +229,6 @@ _GREEN_R7 = {
     "tpch_q19", "tpch_q22", "tpch_q7", "window_range_frames",
 }
 
-# Queries whose HASHED OUTPUT changes in r8 go here (treated as
-# never-verified so they lead the window).
-_RECHECK_R8: set = {
-    # r8: the chunker now covers document tails (a truncated final
-    # chunk per long doc) — more rows, new hashes; oracle changed in
-    # lockstep
-    "chunk_documents",
-}
-
 # r8 window note: with _GREEN_R7 folded in, the stalest tier is the
 # 31 r5-green entries the r7 window skipped (anti_semi_joins,
 # array_functions, asof_join_events_orders, char_entropy,
@@ -265,7 +239,7 @@ _RECHECK_R8: set = {
 # q20/q21, url_domain_stats, window_rank_functions, ann_ivf,
 # ann_ivf_indexed, ann_ivf_pq), then r6-green entries fill the
 # remaining ~19 slots (module order). New r8 queries and
-# _RECHECK_R8 members lead.
+# the hash-changed chunk_documents lead.
 #
 # All 50 rows CORRECTNESS_r08 recorded — every one hash-exact (the 5
 # r8-new queries, the hash-changed chunk_documents, the 31 stalest r5
@@ -285,10 +259,6 @@ _GREEN_R8 = {
     "tpch_q20", "tpch_q21", "tpch_q3", "tpch_q4", "tpch_q5", "tpch_q6",
     "tpch_q8", "tpch_q9", "url_domain_stats", "window_rank_functions",
 }
-
-# Queries whose HASHED OUTPUT changes in r9 go here (treated as
-# never-verified so they lead the window).
-_RECHECK_R9: set = set()
 
 # All 50 rows CORRECTNESS_r09 recorded — every one hash-exact (the 3
 # r9-new DML verbs, the 37 stalest r6-green entries, and 10 r7-green
@@ -312,22 +282,13 @@ _GREEN_R9 = {
     "tpch_q13", "tpch_q18", "tpch_q19", "tpch_q22", "tpch_q7",
 }
 
-# Queries whose HASHED OUTPUT changes in r10 go here (treated as
-# never-verified so they lead the window).
-_RECHECK_R10: set = {
-    # r10: embedding_neardup_ivf now runs the TWO-LEVEL
-    # (coarse-quantizer) assignment — different (still deterministic)
-    # bucket routing, new hashes; oracle changed in lockstep
-    "embedding_neardup_ivf",
-}
-
 # r10 rotation note (verdict r9 item #3): window leads with r10-new
-# queries + _RECHECK_R10, then the 39 entries last green in r7, then
+# queries + the hash-changed embedding_neardup_ivf, then the 39 entries last green in r7, then
 # the 11 stalest r8 entries fill to 50; r9-green is the freshest
 # tier. Max staleness stays <=2 rounds.
 
 # r9 rotation note: with _GREEN_R8 folded in, the window leads with
-# any r9-new queries + _RECHECK_R9 members, then the stalest tier —
+# any r9-new queries, then the stalest tier —
 # the 37 r6-green entries the r8 window did not re-sweep — then
 # r7-green entries (stale one round) fill the remainder. r8-green is
 # the freshest tier. Verified by executing the rotation before
@@ -338,7 +299,7 @@ _RECHECK_R10: set = {
 
 
 # All 50 rows CORRECTNESS_r10 recorded — every one hash-exact (the 4
-# r10-new queries, _RECHECK_R10's embedding_neardup_ivf, the 39
+# r10-new queries, the hash-changed embedding_neardup_ivf, the 39
 # entries last green in r7, and 6 r8-green fills).
 _GREEN_R10 = {
     "ann_knn_join", "ann_knn_join_vectorized", "approx_quantiles_vs_exact",
@@ -357,13 +318,6 @@ _GREEN_R10 = {
     "tfidf_top_terms", "tpch_q1", "tpch_q10", "tpch_q14", "tpch_q3",
     "tpch_q4", "tpch_q5", "tpch_q6", "window_range_frames",
 }
-
-# Queries whose HASHED OUTPUT changes in r11 go here (treated as
-# never-verified so they lead the window). The r11 DML work
-# (distributed deletion-vector writes, MERGE dialect completion) is
-# hash-preserving for every existing query; the one new query
-# (lance_merge_insert_values) leads as never-verified.
-_RECHECK_R11: set = set()
 
 # r11 rotation note: window leads with lance_merge_insert_values
 # (new), then the 41 entries last green in r8 (the stalest tier —
@@ -391,11 +345,6 @@ _GREEN_R11 = {
     "tpch_q20", "tpch_q21", "tpch_q7", "tpch_q8", "tpch_q9",
     "url_domain_stats", "window_rank_functions",
 }
-
-# r12 had no hash-changing queries (the iolayer refactor was
-# IO-plumbing only; its dead `_RECHECK_R12 = set()` was removed in
-# r14 per advice — the rotation only ever consults the newest
-# recheck/defer sets).
 
 # r12 rotation note (r11 verdict item 5): window leads with
 # lance_sql_alter (new), then the 46 entries last green in r9 (the
@@ -472,7 +421,7 @@ _GREEN_R13 = {
     "stream_index_ingest",
 }
 
-# r14 rotation history: _RECHECK_R14 was empty (the two new r14
+# r14 rotation history: no r14 query changed its hash (the two new r14
 # queries — ann_ivf_after_delete, lance_sql_ann — led as new names);
 # hybrid_search_filtered led slot 1 as the one never-driver-checked
 # entry (r13 deferral), and tpch_q11/q12/q15 slipped to r15 at

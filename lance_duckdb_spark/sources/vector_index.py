@@ -1320,7 +1320,7 @@ def ann_search_pq(
        take-by-id on the corpus, a candidate-sized equi-join)."""
     import numpy as np
 
-    from ..operators.similarity import cosine
+    from ..operators.similarity import pair_cosine
 
     meta = read_pq_index_meta(root)
     live_excl = _staleness_gate(spark, root, meta, allow_stale, "IVF_PQ")
@@ -1439,15 +1439,12 @@ def ann_search_pq(
         [(int(r["probe_id"]), list(map(float, r[column]))) for r in probe_rows],
         schema=f"probe_id long, __p array<double>",
     )
-    scored = (
-        refined.join(data, "cand_id")
-        .join(F.broadcast(pvecs), "probe_id")
-        .select(
-            "probe_id",
-            F.col("cand_id").alias("neighbor_id"),
-            cosine("__p", "__v", dim).alias("cos_sim"),
-        )
-    )
+    scored = pair_cosine(
+        refined.join(data, "cand_id").join(F.broadcast(pvecs), "probe_id"),
+        "__p",
+        "__v",
+        dim,
+    ).select("probe_id", F.col("cand_id").alias("neighbor_id"), "cos_sim")
     w2 = Window.partitionBy("probe_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id")
     )

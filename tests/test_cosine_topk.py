@@ -1,11 +1,17 @@
-"""``similarity.cosine_topk`` against the SQL form it replaces.
+"""The cosine kernels of ``similarity`` against the SQL form they replace.
 
-The reference is the pair-join expression the top-k sites used
-before the kernel: ``_clamp1(_dot(pe, ne) / (p_nrm * n_nrm))`` over
-probe x corpus pairs (or probe-bucket x posting pairs), ranked by a
-``row_number`` window on (cos_sim desc, id asc). Rows are compared
-as tuples with floats as ``float.hex``, so ``-0.0`` and ``0.0`` differ
-and every score must be the same double, not a close one.
+The reference is a pair-join expression built here: the dot product
+unrolled into ``t0 + t1 + ...`` over ``CAST(v[i] AS DOUBLE)`` terms,
+divided by the product of the two norms unrolled the same way, and
+clamped by ``least(1, greatest(-1, ...))``. Each kernel is checked
+against it in its own shape: ``cosine_topk`` against a ``row_number``
+window on (cos_sim desc, id asc) over probe x corpus pairs (or
+probe-bucket x posting pairs), ``pair_cosine`` against the expression
+on every pair, and ``nearest_centroids`` (the probes as centroids)
+against a ``row_number`` window on (cos desc, centroid_id asc) per
+corpus row. Rows are compared as tuples with floats as ``float.hex``,
+so ``-0.0`` and ``0.0`` differ and every score must be the same
+double, not a close one.
 """
 
 from __future__ import annotations
@@ -20,10 +26,9 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from lance_duckdb_spark.operators.similarity import (
-    _clamp1,
-    _dot,
     cosine_topk,
-    norm,
+    nearest_centroids,
+    pair_cosine,
 )
 from lance_duckdb_spark.plans.checks import executed_plan
 
@@ -36,8 +41,26 @@ def _bits(rows):
     ]
 
 
+def _sql_dot(a, b, dim):
+    """The dot product as one left-associative SQL sum of ``dim`` terms."""
+    return F.expr(
+        " + ".join(f"(CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE))" for i in range(dim))
+    )
+
+
+def _sql_norm(a, dim):
+    return F.sqrt(_sql_dot(a, a, dim))
+
+
+def _sql_cosine(a, b, dim):
+    return F.least(
+        F.lit(1.0),
+        F.greatest(F.lit(-1.0), _sql_dot(a, b, dim) / (_sql_norm(a, dim) * _sql_norm(b, dim))),
+    )
+
+
 def _sql_topk(spark, corpus, probes, k, exclude_self=True, buckets=None, dim=DIM):
-    """The pre-kernel SQL shape: norms below the join, one dot above."""
+    """The SQL top-k: norms below the join, one dot above."""
     schema = "probe_id long, pe array<double>"
     if buckets is None:
         pf = spark.createDataFrame(probes, schema)
@@ -47,8 +70,8 @@ def _sql_topk(spark, corpus, probes, k, exclude_self=True, buckets=None, dim=DIM
             [(p, b, v) for p, v in probes for b in buckets.get(p, ())] or [],
             schema,
         )
-    pf = pf.withColumn("p_nrm", norm("pe", dim))
-    c = corpus.withColumn("n_nrm", norm("v", dim)).withColumnRenamed("v", "ne")
+    pf = pf.withColumn("p_nrm", _sql_norm("pe", dim))
+    c = corpus.withColumn("n_nrm", _sql_norm("v", dim)).withColumnRenamed("v", "ne")
     if buckets is None:
         cond = F.col("probe_id") != F.col("id") if exclude_self else F.lit(True)
         pairs = c.join(F.broadcast(pf), cond)
@@ -59,9 +82,12 @@ def _sql_topk(spark, corpus, probes, k, exclude_self=True, buckets=None, dim=DIM
     scored = pairs.select(
         "probe_id",
         F.col("id").alias("neighbor_id"),
-        _clamp1(_dot("pe", "ne", dim) / (F.col("p_nrm") * F.col("n_nrm"))).alias(
-            "cos_sim"
-        ),
+        F.least(
+            F.lit(1.0),
+            F.greatest(
+                F.lit(-1.0), _sql_dot("pe", "ne", dim) / (F.col("p_nrm") * F.col("n_nrm"))
+            ),
+        ).alias("cos_sim"),
     )
     w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
@@ -79,6 +105,77 @@ def _kernel(corpus, probes, k, **kw):
         .orderBy("probe_id", "rnk")
         .collect()
     )
+
+
+def _pairs(spark, corpus, probes):
+    pf = spark.createDataFrame(probes, "probe_id long, pe array<double>")
+    return corpus.withColumnRenamed("v", "ne").crossJoin(F.broadcast(pf))
+
+
+def _sql_pair(spark, corpus, probes, k):
+    return (
+        _pairs(spark, corpus, probes)
+        .select("probe_id", "id", _sql_cosine("pe", "ne", DIM).alias("cos_sim"))
+        .orderBy("probe_id", "id")
+        .collect()
+    )
+
+
+def _pair_kernel(spark, corpus, probes, k):
+    return (
+        pair_cosine(_pairs(spark, corpus, probes), "pe", "ne", DIM)
+        .select("probe_id", "id", "cos_sim")
+        .orderBy("probe_id", "id")
+        .collect()
+    )
+
+
+def _sql_nearest(spark, corpus, probes, k):
+    w = Window.partitionBy("id").orderBy(F.desc("c"), F.asc("centroid_id"))
+    return (
+        _pairs(spark, corpus, probes)
+        .select(
+            "id",
+            F.col("probe_id").alias("centroid_id"),
+            _sql_cosine("ne", "pe", DIM).alias("c"),
+        )
+        .withColumn("crnk", F.row_number().over(w))
+        .where(F.col("crnk") <= k)
+        .select("id", "centroid_id", "crnk")
+        .orderBy("id", "crnk")
+        .collect()
+    )
+
+
+def _nearest_kernel(spark, corpus, probes, k):
+    return (
+        nearest_centroids(corpus, "id", "v", probes, k, DIM)
+        .orderBy("id", "crnk")
+        .collect()
+    )
+
+
+# the kernels that score pairs without a probe set's exclusions:
+# (name, SQL reference, kernel), each called as f(spark, corpus, probes, k)
+PAIR_SHAPES = [
+    ("pair_cosine", _sql_pair, _pair_kernel),
+    ("nearest_centroids", _sql_nearest, _nearest_kernel),
+]
+
+
+def _check_pair_shapes(spark, corpus, probes, k):
+    for name, sql, kernel in PAIR_SHAPES:
+        want = sql(spark, corpus, probes, k)
+        assert want, name
+        assert _bits(kernel(spark, corpus, probes, k)) == _bits(want), name
+
+
+def _raise_in_pair_shapes(spark, corpus, probes, match):
+    for name, sql, kernel in PAIR_SHAPES:
+        with pytest.raises(Exception, match=match):
+            sql(spark, corpus, probes, 3)
+        with pytest.raises(Exception, match=match):
+            kernel(spark, corpus, probes, 3)
 
 
 @contextlib.contextmanager
@@ -137,6 +234,8 @@ def test_random_vectors_ties_and_self_exclusion(spark):
                 want = _sql_topk(spark, corpus, probes, k, exclude_self=excl)
                 got = _kernel(corpus, probes, k, exclude_self=excl)
                 assert _bits(got) == _bits(want), (excl, k)
+        # centroids 7 and 107 are the same vector: ties break by id
+        _check_pair_shapes(spark, corpus, probes + [(107, rows[7][1])], 3)
     ties = [r for r in _bits(got) if r[0] == 7 and r[1] in (7, 100, 101, 102)]
     assert [r[1] for r in ties] == [7, 100, 101, 102]
 
@@ -150,6 +249,7 @@ def test_identical_vectors_clamp_to_one(spark):
     got = _kernel(corpus, probes, 5)
     assert _bits(got) == _bits(want)
     assert got[0]["neighbor_id"] == 2 and got[0]["cos_sim"] == 1.0
+    _check_pair_shapes(spark, corpus, probes + [(4, [0.5, 0.25, 0.125, 1.0])], 2)
 
 
 def test_leading_negative_zero_term(spark):
@@ -162,6 +262,7 @@ def test_leading_negative_zero_term(spark):
     got = _kernel(corpus, probes, 5)
     assert _bits(got) == _bits(want)
     assert (-0.0).hex() in {r[2] for r in _bits(got)}
+    _check_pair_shapes(spark, corpus, probes, 1)
 
 
 def test_nan_element_clamps_to_one(spark):
@@ -173,6 +274,7 @@ def test_nan_element_clamps_to_one(spark):
     got = _kernel(corpus, probes, 5)
     assert _bits(got) == _bits(want)
     assert got[0]["neighbor_id"] == 1 and got[0]["cos_sim"] == 1.0
+    _check_pair_shapes(spark, corpus, probes + [(8, [4.0, 3.0, 2.0, 1.0])], 2)
 
 
 def test_null_vectors_and_elements_clamp_to_minus_one(spark):
@@ -188,6 +290,7 @@ def test_null_vectors_and_elements_clamp_to_minus_one(spark):
     with _batches(spark):
         want = _sql_topk(spark, corpus, probes, 100)
         got = _kernel(corpus, probes, 100)
+        _check_pair_shapes(spark, corpus, probes, 2)
     assert _bits(got) == _bits(want)
     by_probe = {}
     for r in got:
@@ -209,9 +312,11 @@ def test_zero_vector_matches_sql(spark):
         _sql_topk(spark, corpus, probes, 5)
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
         _kernel(corpus, probes, 5)
+    _raise_in_pair_shapes(spark, corpus, probes, "DIVIDE_BY_ZERO")
     with _conf(spark, "spark.sql.ansi.enabled", "false"):
         want = _sql_topk(spark, corpus, probes, 5)
         got = _kernel(corpus, probes, 5)
+        _check_pair_shapes(spark, corpus, probes + [(8, [0.0] * 4)], 2)
     assert _bits(got) == _bits(want)
     assert [r["cos_sim"] == -1.0 for r in got] == [False, True]
 
@@ -223,6 +328,7 @@ def test_short_and_long_vectors(spark):
     want = _sql_topk(spark, corpus, probes, 5)
     got = _kernel(corpus, probes, 5)
     assert _bits(got) == _bits(want) and len(got) == 2
+    _check_pair_shapes(spark, corpus, probes, 1)
     short = _frame(spark, long_rows + [(3, [1.0, 2.0])])
     with pytest.raises(Exception, match="INVALID_ARRAY_INDEX"):
         _sql_topk(spark, short, probes, 5)
@@ -230,6 +336,8 @@ def test_short_and_long_vectors(spark):
         _kernel(short, probes, 5)
     with pytest.raises(Exception, match="INVALID_ARRAY_INDEX"):
         _kernel(corpus, [(9, [1.0, 1.0])], 5)
+    _raise_in_pair_shapes(spark, short, probes, "INVALID_ARRAY_INDEX")
+    _raise_in_pair_shapes(spark, corpus, [(9, [1.0, 1.0])], "INVALID_ARRAY_INDEX")
 
 
 def test_empty_batches_and_empty_probes(spark):
@@ -290,3 +398,23 @@ def test_topk_plans_hold_no_nested_loop_join(spark, sf_dir):
             assert "MapInArrow" in plan, plan
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def test_vector_plans_hold_no_unrolled_dot(spark, sf_dir):
+    """Every exact vector score runs in an Arrow kernel: no plan of
+    the vector queries projects element 63 of a vector, as an
+    unrolled 64-term SQL dot would."""
+    import re
+
+    from lance_duckdb_spark.registry import QUERY_REGISTRY
+
+    for name in (
+        "ann_ivf",
+        "ann_knn_join",
+        "embedding_neardup_ivf",
+        "embedding_neardup_lsh",
+        "ann_ivf_pq",
+        "ann_sq8_indexed",
+    ):
+        plan = executed_plan(QUERY_REGISTRY[name](spark, sf_dir))
+        assert not re.search(r"#\d+\[63\]", plan), (name, plan)

@@ -1,8 +1,9 @@
 """Batch KNN join (operators/knn_join.py): planted-geometry
-semantics, the 100 TB plan shape (shuffle-hash candidate join on the
-bucket id, no broadcast of either big side), and recall vs the exact
-answer on the real corpus. Oracle equality on the real testdata is
-covered by test_correctness.py."""
+semantics, the 100 TB plan shape (bucket scoring behind one exchange
+hashed on the bucket id alone), recall vs the exact answer on the
+real corpus, and oracle equality at a non-default centroid count.
+Oracle equality at the registry's settings is covered by
+test_correctness.py."""
 
 from __future__ import annotations
 
@@ -15,6 +16,9 @@ from pyspark.sql import functions as F
 
 from lance_duckdb_spark.operators import knn_join
 from lance_duckdb_spark.operators.similarity import IVF_K
+from lance_duckdb_spark.plans.checks import executed_plan
+
+from .oracle import duckdb_connection
 
 
 @pytest.fixture(scope="module")
@@ -53,7 +57,7 @@ def planted_dir(tmp_path_factory):
 
 
 def test_knn_join_planted_neighbors(spark, planted_dir):
-    out = knn_join.ann_knn_join(spark, planted_dir).collect()
+    out = knn_join.ann_knn_join_vectorized(spark, planted_dir).collect()
     assert out, "query slice must be non-empty"
     got = {}
     for r in out:
@@ -75,21 +79,19 @@ def test_knn_join_planted_neighbors(spark, planted_dir):
 
 
 def test_knn_join_plan_is_shuffle_hash_on_bucket(spark, planted_dir):
-    """The candidate join must be a ShuffledHashJoin keyed on
-    centroid_id — not a broadcast of the corpus (which dies at
-    100 TB) and not a sort-merge (needless sort of vector rows)."""
-    df = knn_join.ann_knn_join(spark, planted_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    join_lines = [
-        ln
+    """Bucket scoring sits behind ONE exchange hashed on centroid_id
+    alone: both roles of a bucket meet in one task, no vector is
+    broadcast or re-joined per pair, and no wider key (which would
+    split a bucket's rows) is hashed."""
+    plan = executed_plan(knn_join.ann_knn_join_vectorized(spark, planted_dir))
+    keys = [
+        ln.split("hashpartitioning(")[1].rsplit(",", 1)[0]
         for ln in plan.splitlines()
-        if "ShuffledHashJoin" in ln and "centroid_id" in ln
+        if "hashpartitioning(" in ln and "centroid_id" in ln
     ]
-    assert join_lines, plan
-    # the candidate join must not have been flipped to a broadcast
-    # of either big side: no BroadcastHashJoin keys on centroid_id
-    # anywhere in the plan (the centroid fans are nested-loop
-    # crossJoins of the IVF_K-row dim, a different node)
+    assert keys, plan
+    for k in keys:
+        assert k.startswith("centroid_id#") and k.count("#") == 1, plan
     for ln in plan.splitlines():
         if "BroadcastHashJoin" in ln:
             assert "centroid_id" not in ln, ln
@@ -99,74 +101,40 @@ def test_knn_join_recall_vs_exact(spark, sf_dir):
     """On the real corpus the nprobe=4/K=16 geometry must keep
     recall@5 against the exact answer >= 0.7 (same bound family as
     the IVF search ops; measured ~0.8-0.95 across sf0.001-0.1)."""
-    from lance_duckdb_spark.operators.similarity import _clamp1, _dot, norm
+    from lance_duckdb_spark.operators.similarity import cosine_topk
     from lance_duckdb_spark.tables import load
-    from pyspark.sql import Window
 
     emb = load(spark, sf_dir, "embeddings")
-    queries = emb.where(
-        F.col("vec_id") % knn_join.KNN_QUERY_MOD == knn_join.KNN_QUERY_REM
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        norm("embedding").alias("q_nrm"),
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ne"),
-        norm("embedding").alias("n_nrm"),
-    )
-    scored = corpus.join(
-        F.broadcast(queries), F.col("query_id") != F.col("neighbor_id")
-    ).select(
-        "query_id",
-        "neighbor_id",
-        _clamp1(
-            _dot("qe", "ne") / (F.col("q_nrm") * F.col("n_nrm"))
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
+    queries = [
+        (r["vec_id"], r["embedding"])
+        for r in emb.where(
+            F.col("vec_id") % knn_join.KNN_QUERY_MOD == knn_join.KNN_QUERY_REM
+        ).collect()
+    ]
     exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= knn_join.KNN_JOIN_K)
-        .collect()
+        (r["probe_id"], r["neighbor_id"])
+        for r in cosine_topk(
+            emb, "vec_id", "embedding", queries, knn_join.KNN_JOIN_K
+        ).collect()
     }
     approx = {
         (r["query_id"], r["neighbor_id"])
-        for r in knn_join.ann_knn_join(spark, sf_dir).collect()
+        for r in knn_join.ann_knn_join_vectorized(spark, sf_dir).collect()
     }
     assert len(approx & exact) / len(exact) >= 0.7
 
 
-def test_vectorized_variant_bit_identical(spark, sf_dir):
-    """The C42-machinery scale variant must reproduce the
-    all-declarative reference implementation bit-for-bit — that
-    equality is what lets it share the oracle (and what proves the
-    fold-ordered numpy assignment/scoring is the same arithmetic)."""
-    a = sorted(map(tuple, knn_join.ann_knn_join(spark, sf_dir).collect()))
-    b = sorted(
-        map(
-            tuple,
-            knn_join.ann_knn_join_vectorized(spark, sf_dir).collect(),
-        )
-    )
-    assert a == b
-
-
 def test_vectorized_variant_scaled_k(spark, sf_dir):
-    """At a non-default centroid count the two forms still agree —
-    the smoke runs the vectorized form at k ~ n/500, so the
-    equivalence must not be an artifact of k == IVF_K."""
-    a = sorted(
-        map(
-            tuple,
-            knn_join.ann_knn_join(spark, sf_dir, k_centroids=32).collect(),
-        )
-    )
-    b = sorted(
+    """At a non-default centroid count the operator still matches the
+    DuckDB oracle formatted with that count — the smoke runs it at
+    k ~ n/500, so oracle equality must not be an artifact of
+    k == IVF_K."""
+    sql = knn_join.ANN_KNN_JOIN_SQL
+    assert sql.count(f"LIMIT {IVF_K}\n") == 1
+    con = duckdb_connection(sf_dir)
+    want = sorted(con.execute(sql.replace(f"LIMIT {IVF_K}\n", "LIMIT 32\n")).fetchall())
+    con.close()
+    got = sorted(
         map(
             tuple,
             knn_join.ann_knn_join_vectorized(
@@ -174,16 +142,15 @@ def test_vectorized_variant_scaled_k(spark, sf_dir):
             ).collect(),
         )
     )
-    assert a == b
+    assert want and got == want
 
 
 def test_zero_norm_vectors_refused_by_both_forms(spark, tmp_path):
-    """Zero-norm embeddings make cosine undefined (0/0): the
-    declarative form dies in Spark's ANSI DIVIDE_BY_ZERO, and the
-    numpy path would otherwise emit NaN cosines ranked differently
-    than Spark's NaN-greatest desc order — silently breaking the
-    bit-identity contract (r10 advice). Both forms must therefore
-    FAIL LOUDLY on a zero vector, neither producing NaN rankings."""
+    """Zero-norm embeddings make cosine undefined (0/0). Both the
+    flat and the two-level assignment must FAIL LOUDLY on a zero
+    vector — the flat tier's Arrow kernel with ANSI DIVIDE_BY_ZERO,
+    as the SQL would, the two-level tier's numpy shapes through
+    _require_nonzero_norms — rather than rank NaN cosines."""
     n_per = 8
     ids, vecs = [], []
     for c in range(IVF_K):
@@ -212,8 +179,6 @@ def test_zero_norm_vectors_refused_by_both_forms(spark, tmp_path):
     os.makedirs(d)
     pq.write_table(emb, os.path.join(d, "embeddings.parquet"))
 
-    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-        knn_join.ann_knn_join(spark, d).collect()
     with pytest.raises(Exception, match="zero-norm embedding"):
         knn_join.ann_knn_join_vectorized(spark, d).collect()
     # the scale (two-level) tier refuses too
@@ -221,16 +186,6 @@ def test_zero_norm_vectors_refused_by_both_forms(spark, tmp_path):
         knn_join.ann_knn_join_vectorized(
             spark, d, k_centroids=256
         ).collect()
-
-
-def test_declarative_form_refuses_large_corpus(spark, sf_dir, monkeypatch):
-    """The quarantine guard (r8 VERDICT item 3): the all-declarative
-    form is a small-scale diagnostic — past the documented corpus
-    bound it must refuse loudly and name the bit-identical
-    vectorized scale path, never run superlinear work silently."""
-    monkeypatch.setattr(knn_join, "KNN_DECLARATIVE_MAX_CORPUS", 1)
-    with pytest.raises(ValueError, match="ann_knn_join_vectorized"):
-        knn_join.ann_knn_join(spark, sf_dir).collect()
 
 
 def test_knn_join_filtered_corpus_predicate(spark, sf_dir):

@@ -131,14 +131,14 @@ def test_ann_ivf_indexed_recall_and_pruning(spark, sf_dir):
 
 
 def test_high_dim_dot_bit_exact(spark):
-    """Regression (r4): dims above CODEGEN_DOT_MAX_DIM route to the
-    Arrow-batched fold — no 64KB codegen overflow at 1024 dims, and
-    the result stays bit-identical to the dimension-sequential
-    float64 fold (the same contract as the unrolled path)."""
+    """pair_cosine at production dims (1024): no per-dimension SQL
+    expression to outgrow, and every score is the dot summed left to
+    right in float64 over the norms summed the same way, clamped to
+    [-1, 1] — the fold DuckDB runs."""
     import numpy as np
     from pyspark.sql import functions as F
 
-    from lance_duckdb_spark.operators.similarity import _dot
+    from lance_duckdb_spark.operators.similarity import pair_cosine
 
     rng = np.random.RandomState(7)
     n, dim = 60, 1024
@@ -149,21 +149,23 @@ def test_high_dim_dot_bit_exact(spark):
     )
     probe = df.where("vec_id = 0").select(F.col("embedding").alias("p"))
     got = (
-        df.crossJoin(F.broadcast(probe))
-        .select(
-            "vec_id", _dot(F.col("embedding"), F.col("p"), dim).alias("d")
-        )
+        pair_cosine(df.crossJoin(F.broadcast(probe)), "embedding", "p", dim)
+        .select("vec_id", "cos_sim")
         .orderBy("vec_id")
         .collect()
     )
     X = mat.astype(np.float64)
-    p = X[0]
-    acc = np.zeros(n)
-    for i in range(dim):
-        acc += X[:, i] * p[i]
+    P = np.broadcast_to(X[0], X.shape)
+
+    def fold(a, b):
+        acc = a[:, 0] * b[:, 0]
+        for i in range(1, dim):
+            acc = acc + a[:, i] * b[:, i]
+        return acc
+
+    want = np.clip(fold(X, P) / (np.sqrt(fold(X, X)) * np.sqrt(fold(P, P))), -1.0, 1.0)
     assert len(got) == n
-    for r, e in zip(got, acc):
-        assert r.d == e, "Arrow fold diverged from sequential fold"
+    assert [r.cos_sim for r in got] == want.tolist(), "kernel diverged from the fold"
 
 
 def test_ivf_build_high_dim_and_distributed_init(spark, tmp_path):

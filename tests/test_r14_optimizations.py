@@ -11,7 +11,6 @@ from lance_duckdb_spark.materialize import spill_to_parquet
 from lance_duckdb_spark.operators import dedup, timeseries as ts
 from lance_duckdb_spark.operators.common import spread
 from lance_duckdb_spark.operators.curation import BENCH_MOD, CONTAM_N, _word_ngrams
-from lance_duckdb_spark.operators.similarity import _clamp1, _dot, cosine, norm
 from lance_duckdb_spark.tables import load
 
 
@@ -115,49 +114,6 @@ def test_gram_rows_slice_equivalence(spark, sf_dir):
     ).collect()
     key = lambda r: (r.doc_id, r.gram)  # noqa: E731
     assert sorted(full_then_filter, key=key) == sorted(filter_then_gram, key=key)
-
-
-# --- ann_search scored stage: staged norms == inlined cosine --------
-
-
-def test_staged_norm_scoring_bit_identical_to_cosine(spark, sf_dir):
-    """The r14 scored stage computes clamp(dot/(p_nrm*n_nrm)) with
-    norms projected below the join; it must be BIT-identical to the
-    inlined cosine() it replaced (same fold order, same operand
-    order) on real corpus vectors."""
-    dim = 64
-    emb = (
-        load(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .limit(12)
-    )
-    a = emb.select(F.col("vec_id").alias("ida"), F.col("v").alias("va"))
-    b = emb.select(F.col("vec_id").alias("idb"), F.col("v").alias("vb"))
-    pairs = a.crossJoin(b).where(F.col("ida") < F.col("idb"))
-
-    staged = (
-        pairs.withColumn("__a_nrm", norm("va", dim))
-        .withColumn("__b_nrm", norm("vb", dim))
-        .select(
-            "ida",
-            "idb",
-            _clamp1(
-                _dot("va", "vb", dim) / (F.col("__a_nrm") * F.col("__b_nrm"))
-            ).alias("s"),
-        )
-        .orderBy("ida", "idb")
-        .collect()
-    )
-    inlined = (
-        pairs.select("ida", "idb", cosine("va", "vb", dim).alias("s"))
-        .orderBy("ida", "idb")
-        .collect()
-    )
-    assert len(staged) > 0
-    # bit-exact: == on python floats is exact equality of the doubles
-    assert [(r.ida, r.idb, r.s) for r in staged] == [
-        (r.ida, r.idb, r.s) for r in inlined
-    ]
 
 
 # --- ann_ivf_after_delete: serve subtree executes once -------------

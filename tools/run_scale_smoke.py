@@ -326,18 +326,12 @@ def main() -> None:
             ),
             "pairs",
         ),
-        # The all-declarative ann_knn_join is deliberately NOT in
-        # this roster: the r7 smoke measured its constants
-        # superlinear at 10x twice over — with the driver-default
-        # k=16 the candidate work is corpus^2/k by construction
-        # (2e9 dots at sfd10), and with the ~500-per-bucket scaled k
-        # the n*k scalar assignment plus a hot-bucket straggler in
-        # the per-pair Arrow scoring stage still dominated. What IS
-        # measured is the bit-identical C42-machinery scale variant
-        # (fold-vectorized assignment + per-bucket matrix scoring),
-        # at the same ~500-per-bucket k rule as the ivf_neardup
-        # entry; output rows are |Q|*5 (trivially 10x), the signal
-        # is the runtime ratio.
+        # The KNN join (registered as both ann_knn_join and
+        # ann_knn_join_vectorized) runs at the same ~500-per-bucket k
+        # rule as the ivf_neardup entry: with the driver-default k=16
+        # its candidate work is corpus^2/k by construction (2e9 dots
+        # at sfd10). Output rows are |Q|*5 (trivially 10x); the
+        # signal is the runtime ratio.
         "ann_knn_join_vec_rows": (
             lambda d: knn_join.ann_knn_join_vectorized(
                 spark,
